@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
+import scala.collection.concurrent.TrieMap
 
 /** Parquet loaders for the driver-generated testdata tables.
   *
@@ -9,31 +11,54 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Catalyst pushes filters/projections into the scans.
   */
 object Tables {
-  // memoize resolved plans per (session, path): a fresh spark.read re-lists
-  // files and re-reads the footer schema every call — measurable fixed
-  // overhead when 40+ operators each load 1-3 tables. Weak on BOTH the
-  // session key and the plan value (a DataFrame strongly references its
-  // session, so a strong value would pin the weak key forever) — dead
-  // sessions from tests/repeated runs stay collectable (ADVICE r2).
-  // A cleared value just re-lists on the next call.
-  private val cache = new java.util.WeakHashMap[SparkSession,
-    scala.collection.concurrent.TrieMap[String, java.lang.ref.WeakReference[DataFrame]]]()
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** Per-session memo of each table's inferred schema. Inference runs a
+    * Spark job that reads the parquet footers, and every operator loads
+    * 1–3 tables, so without the memo each query pays one schema job per
+    * table. Keyed by path and the nanos shim's value, which types
+    * `events.ts` (LONG under the shim; refused without it). Each entry
+    * also keeps the table's file listing (path, length, modification
+    * time), and a load whose listing differs — a table rewritten in
+    * place — infers again. A `StructType` holds no session, so entries
+    * are held strongly; only the session key is weak, and a dead
+    * session's memo goes with it. Files are listed on every load, as a
+    * fresh `spark.read` does, so no file index is cached. */
+  private val schemas = new java.util.WeakHashMap[SparkSession,
+    TrieMap[(String, Option[String]), (Seq[(String, Long, Long)], StructType)]]()
+
+  /** Every file under `path` with its length and modification time;
+    * empty when the path is missing (inference then raises Spark's own
+    * PATH_NOT_FOUND). */
+  private def listing(spark: SparkSession, path: String): Seq[(String, Long, Long)] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val files = Vector.newBuilder[(String, Long, Long)]
+    try {
+      val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+    } catch { case _: java.io.FileNotFoundException => () }
+    files.result().sorted
+  }
+
+  private def schema(spark: SparkSession, path: String): StructType = {
+    val memo = schemas.synchronized(schemas.computeIfAbsent(spark, _ => TrieMap.empty))
+    val key = (path, spark.conf.getOption(NanosAsLong))
+    val files = listing(spark, path)
+    memo.get(key) match {
+      case Some((`files`, s)) => s
+      case _ =>
+        val s = spark.read.parquet(path).schema
+        memo.put(key, (files, s))
+        s
+    }
+  }
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val m = cache.synchronized {
-      var t = cache.get(spark)
-      if (t == null) {
-        t = scala.collection.concurrent.TrieMap.empty
-        cache.put(spark, t)
-      }
-      t
-    }
     val path = s"$dir/$name.parquet"
-    m.get(path).flatMap(r => Option(r.get)).getOrElse {
-      val df = spark.read.parquet(path)
-      m.put(path, new java.lang.ref.WeakReference(df))
-      df
-    }
+    spark.read.schema(schema(spark, path)).parquet(path)
   }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
@@ -55,8 +80,7 @@ object Tables {
     * hygiene #2).
     */
   private[graft] def ensureNanosShim(s: SparkSession): Unit = {
-    if (s.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true")
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    if (s.conf.get(NanosAsLong, "false") != "true") s.conf.set(NanosAsLong, "true")
     // getOption, not get(key, ""): Spark 4.1 VALIDATES the supplied
     // default against the conf entry, and '' is not a resolvable
     // timezone — on a fresh default session (no timeZone set anywhere)

@@ -317,7 +317,7 @@ object CoreOracles {
     },
 
     "q35_funnel" ->
-      """WITH f AS (
+      s"""WITH f AS (
         |  SELECT user_id,
         |         MIN(CASE WHEN event_type = 'signup' THEN epoch_us(CAST(ts AS TIMESTAMP)) END) AS s,
         |         MIN(CASE WHEN event_type = 'view' THEN epoch_us(CAST(ts AS TIMESTAMP)) END) AS v,
@@ -332,18 +332,19 @@ object CoreOracles {
         |         (s IS NOT NULL AND v IS NOT NULL AND v >= s AND c IS NOT NULL AND c >= v
         |          AND p IS NOT NULL AND p >= c) AS r4
         |  FROM f
+        |), g AS (
+        |  SELECT SUM(CASE WHEN r1 THEN 1 ELSE 0 END) AS n_r1,
+        |         SUM(CASE WHEN r2 THEN v - s END) AS g_r2, SUM(CASE WHEN r2 THEN 1 ELSE 0 END) AS n_r2,
+        |         SUM(CASE WHEN r3 THEN c - v END) AS g_r3, SUM(CASE WHEN r3 THEN 1 ELSE 0 END) AS n_r3,
+        |         SUM(CASE WHEN r4 THEN p - c END) AS g_r4, SUM(CASE WHEN r4 THEN 1 ELSE 0 END) AS n_r4
+        |  FROM r
         |)
-        |SELECT CAST(SUM(CASE WHEN r1 THEN 1 ELSE 0 END) AS BIGINT) AS n_signup,
-        |       CAST(SUM(CASE WHEN r2 THEN 1 ELSE 0 END) AS BIGINT) AS n_view,
-        |       CAST(SUM(CASE WHEN r3 THEN 1 ELSE 0 END) AS BIGINT) AS n_click,
-        |       CAST(SUM(CASE WHEN r4 THEN 1 ELSE 0 END) AS BIGINT) AS n_purchase,
-        |       ROUND(CAST(SUM(CASE WHEN r2 THEN v - s END) AS DOUBLE)
-        |             / CAST(SUM(CASE WHEN r2 THEN 1 ELSE 0 END) AS DOUBLE), 4) AS avg_us_signup_view,
-        |       ROUND(CAST(SUM(CASE WHEN r3 THEN c - v END) AS DOUBLE)
-        |             / CAST(SUM(CASE WHEN r3 THEN 1 ELSE 0 END) AS DOUBLE), 4) AS avg_us_view_click,
-        |       ROUND(CAST(SUM(CASE WHEN r4 THEN p - c END) AS DOUBLE)
-        |             / CAST(SUM(CASE WHEN r4 THEN 1 ELSE 0 END) AS DOUBLE), 4) AS avg_us_click_purchase
-        |FROM r""".stripMargin,
+        |SELECT CAST(n_r1 AS BIGINT) AS n_signup, CAST(n_r2 AS BIGINT) AS n_view,
+        |       CAST(n_r3 AS BIGINT) AS n_click, CAST(n_r4 AS BIGINT) AS n_purchase,
+        |       ${CoreQueries.avgGap4("g_r2", "n_r2", "//")} AS avg_us_signup_view,
+        |       ${CoreQueries.avgGap4("g_r3", "n_r3", "//")} AS avg_us_view_click,
+        |       ${CoreQueries.avgGap4("g_r4", "n_r4", "//")} AS avg_us_click_purchase
+        |FROM g""".stripMargin,
 
     "q36_cohort" ->
       """WITH ev AS (

@@ -521,20 +521,28 @@ object CoreQueries {
       .withColumn("r2", col("r1") && col("v").isNotNull && col("v") >= col("s"))
       .withColumn("r3", col("r2") && col("c").isNotNull && col("c") >= col("v"))
       .withColumn("r4", col("r3") && col("p").isNotNull && col("p") >= col("c"))
-    // averages as explicit exact-int SUM / COUNT in one double division —
-    // engine-internal AVG algorithms (incremental means) would differ in ulps
-    def avgGap(flag: String, a: String, b: String) =
-      round(sum(when(col(flag), col(a) - col(b))).cast("double") /
-        sum(when(col(flag), 1L).otherwise(0L)).cast("double"), 4)
-    perUser.agg(
-      sum(when(col("r1"), 1L).otherwise(0L)).as("n_signup"),
-      sum(when(col("r2"), 1L).otherwise(0L)).as("n_view"),
-      sum(when(col("r3"), 1L).otherwise(0L)).as("n_click"),
-      sum(when(col("r4"), 1L).otherwise(0L)).as("n_purchase"),
-      avgGap("r2", "v", "s").as("avg_us_signup_view"),
-      avgGap("r3", "c", "v").as("avg_us_view_click"),
-      avgGap("r4", "p", "c").as("avg_us_click_purchase"))
+    def stage(flag: String, a: String, b: String) =
+      Seq(sum(when(col(flag), col(a) - col(b))).as(s"g_$flag"),
+        sum(when(col(flag), 1L).otherwise(0L)).as(s"n_$flag"))
+    perUser.agg(sum(when(col("r1"), 1L).otherwise(0L)).as("n_r1"),
+        stage("r2", "v", "s") ++ stage("r3", "c", "v") ++ stage("r4", "p", "c"): _*)
+      .select(col("n_r1").as("n_signup"), col("n_r2").as("n_view"),
+        col("n_r3").as("n_click"), col("n_r4").as("n_purchase"),
+        expr(avgGap4("g_r2", "n_r2", "DIV")).as("avg_us_signup_view"),
+        expr(avgGap4("g_r3", "n_r3", "DIV")).as("avg_us_view_click"),
+        expr(avgGap4("g_r4", "n_r4", "DIV")).as("avg_us_click_purchase"))
   }
+
+  /** q35's mean gap rounded half-up to 4dp, as SQL shared with the
+    * oracle (`div` is the dialect's integer division): the exact-int
+    * quotient SUM / COUNT is split into whole and remainder parts so the
+    * rounding happens in integers, then one double division by 10⁴. A
+    * double quotient rounded to 4dp can differ between engines in the
+    * last digit once the sum has 12+ digits (seed-1 sf0.01:
+    * 15073456561764 / 74 = …942.756756…, whose double is …942.756744…).
+    * Gaps are ≥ 0; `rem·20000` stays in int64 below 4.6·10¹⁴ users. */
+  private[graft] def avgGap4(gaps: String, n: String, div: String): String =
+    s"CAST(($gaps $div $n) * 10000 + (($gaps % $n) * 20000 + $n) $div (2 * $n) AS DOUBLE) / 10000.0"
 
   /** q36: cohort retention matrix.
     * Mirrors usage-over-time analyses (notebooks/intake/certification-

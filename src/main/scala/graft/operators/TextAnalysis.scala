@@ -58,13 +58,22 @@ object TextAnalysis {
     * n-gram heuristic — parity with the oracle matters, not accuracy.
     */
   def t28Langid(spark: SparkSession, dir: String): DataFrame = {
-    withPredLang(Tables.documents(spark, dir)
+    withPredLang(sortedByDoc(Tables.documents(spark, dir), "lang", "text")
         .withColumn("words", split(col("text"), " ")))
       .select(col("doc_id"), col("pred_lang"), col("lang").as("actual_lang"),
         (col("pred_lang") === col("lang")).cast("int").as("correct"),
         col("s_en"), col("s_de"), col("s_es"), col("s_fr"), col("s_zh"))
-      .orderBy("doc_id")
   }
+
+  /** `doc_id` plus `cols`, globally sorted on `doc_id` — the base of the
+    * per-document kernel operators, whose kernels are projected ABOVE
+    * this sort. A global sort's range partitioner samples by running the
+    * exchange's child once more before the map stage runs it, so a
+    * kernel projected below the sort was evaluated twice per row; above
+    * it, the raw rows cross the exchange and the kernel runs once, on
+    * the post-exchange tasks. */
+  private[graft] def sortedByDoc(documents: DataFrame, cols: String*): DataFrame =
+    documents.select("doc_id", cols: _*).orderBy("doc_id")
 
   /** Adds length/stopword quality metrics and `score_x10000`. Requires a
     * `words` column. Shared by t29 and the p55 pipeline. The score is
@@ -97,12 +106,11 @@ object TextAnalysis {
     * filtering pipelines.
     */
   def t29Quality(spark: SparkSession, dir: String): DataFrame = {
-    withQualityScore(Tables.documents(spark, dir)
+    withQualityScore(sortedByDoc(Tables.documents(spark, dir), "text")
         .withColumn("words", split(col("text"), " ")))
       .withColumn("quality_ok", (col("score_x10000") >= 5000L).cast("int"))
       .select("doc_id", "n_chars_m", "n_words", "avg_word_len", "stop_ratio",
         "score_x10000", "quality_ok")
-      .orderBy("doc_id")
   }
 
   /** t30: token counting per source — whitespace tokens, distinct
@@ -306,7 +314,7 @@ object TextAnalysis {
     */
   def t34Repetition(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    Tables.documents(spark, dir)
+    sortedByDoc(Tables.documents(spark, dir), "text")
       .withColumn("words", split(col("text"), " "))
       .filter(size(col("words")) >= 2)
       .withColumn("rs", expr("graft_rep_stats(words)"))
@@ -321,7 +329,6 @@ object TextAnalysis {
       .withColumn("rep_flagged",
         (col("dup_word_pm") >= DupWordFlagPm ||
          col("top_bigram_pm") >= TopBigramFlagPm).cast("int"))
-      .orderBy("doc_id")
   }
 
   /** t35 keywords kept per document. */
@@ -433,7 +440,13 @@ object TextAnalysis {
     * fallback — semantics unchanged.
     */
   def t36LmScore(spark: SparkSession, dir: String): DataFrame =
-    t36Scores(Tables.documents(spark, dir)).orderBy("doc_id")
+    // the score kernel sits above a broadcast cross join, so it cannot
+    // move above the sort (a join does not keep its input's order); a
+    // hash exchange of the narrow score rows puts a stage boundary
+    // under the range exchange instead, and its sampling job reads that
+    // shuffle output rather than re-running the kernel
+    t36Scores(Tables.documents(spark, dir))
+      .repartition(col("doc_id")).orderBy("doc_id")
 
   /** t36's per-doc score core — (doc_id, n_bigrams, lm_score_ppm) for
     * every doc with >= 2 words; shared with t43's bucket split (one
@@ -685,7 +698,9 @@ object TextAnalysis {
     * its summation order.
     *
     * 100 TB posture: a pure projection — embarrassingly parallel,
-    * partition-local, nothing shuffles but the output rows.
+    * partition-local — above the presentation sort ([[sortedByDoc]]):
+    * the raw (doc_id, lang, text) rows cross the range exchange, and
+    * the kernel runs once per row.
     */
   def t40Entropy(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
@@ -696,7 +711,7 @@ object TextAnalysis {
     * property suite can drive adversarial texts (multi-byte, repeated
     * separators, empty) through the exact production plan. */
   private[graft] def t40EntropyCore(documents: DataFrame): DataFrame = {
-    documents
+    sortedByDoc(documents, "lang", "text")
       .withColumn("es", expr("graft_entropy_stats(text)"))
       .select(col("doc_id"), col("lang"),
         col("es").getItem(4).cast("long").as("n_chars"),
@@ -708,7 +723,6 @@ object TextAnalysis {
         expr("n_distinct_words * 10000 DIV n_words"))
       .withColumn("low_entropy",
         (col("char_entropy") < lit(LowEntropyBar)).cast("int"))
-      .orderBy("doc_id")
   }
 
   /** t42's blocklist. A real deployment loads thousands of terms from a

@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec, ShuffleExchangeExec}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan assertions (SURVEY.md §5): filters and projections must
@@ -14,12 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * here.
   */
 class PlanSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.create(4)
 
   val dir = "/root/testdata/sf0.001"
 
@@ -34,10 +30,48 @@ class PlanSpec extends AnyFunSuite {
   private def planString(df: org.apache.spark.sql.DataFrame): String =
     executed(df).toString
 
-  private def countExchanges(df: org.apache.spark.sql.DataFrame): Int = {
-    var n = 0
-    executed(df).foreach { case _: Exchange => n += 1; case _ => () }
-    n
+  /** Every node of `p`, descending into AQE query stages (leaves to
+    * `foreach`/`collect`, which therefore never see a finished plan's
+    * exchanges). A reused exchange is not entered: its exchange is
+    * already in the tree. */
+  private def allNodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case s: QueryStageExec => allNodes(s.plan)
+    case _ => p.children.flatMap(allNodes)
+  })
+
+  private def countExchanges(df: org.apache.spark.sql.DataFrame): Int =
+    allNodes(executed(df)).count(_.isInstanceOf[Exchange])
+
+  /** graft kernels evaluated in the child of a global sort's range
+    * exchange. The range partitioner's sampling job runs that child once
+    * more before the map stage runs it, so a kernel there is evaluated
+    * twice; a finished query stage below the exchange is a boundary
+    * (sampling then reads its shuffle output). */
+  private def kernelsBelowRangeExchange(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    def sampled(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: QueryStageExec | _: Exchange | _: ReusedExchangeExec => Nil
+      case _ => p +: p.children.flatMap(sampled)
+    }
+    allNodes(executed(df)).collect {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+    }.flatMap(e => sampled(e.child)).flatMap(_.expressions)
+      .flatMap(_.collect { case k if k.prettyName.startsWith("graft_") => k.prettyName })
+      .distinct
+  }
+
+  test("per-document kernels run once under the presentation sort (t28 t29 t34 t36 t40)") {
+    // a kernel in a range exchange's child runs in the sampling job and
+    // again in the map stage: t40's graft_entropy_stats did both
+    for ((k, kernel) <- Seq("t28_langid" -> "graft_stop_scores",
+        "t29_quality" -> "graft_stop_scores", "t34_repetition" -> "graft_rep_stats",
+        "t36_lm_score" -> "graft_lm_doc_score", "t40_entropy" -> "graft_entropy_stats")) {
+      val df = SparkEntry.queries(k)(spark, dir)
+      val p = planString(df)
+      assert(p.contains("rangepartitioning(doc_id"), s"$k: no global sort on doc_id:\n$p")
+      assert(p.contains(kernel), s"$k: $kernel missing:\n$p")
+      val twice = kernelsBelowRangeExchange(df)
+      assert(twice.isEmpty, s"$k: $twice in the range exchange's sampled child:\n$p")
+    }
   }
 
   test("orderAssembly family plans hash aggregation, never SortAggregate (r16)") {

@@ -16,12 +16,7 @@ class PropertySpec extends AnyFunSuite {
     * offline dep set — drive ScalaCheck generators directly). */
   private def samples[T](gen: Gen[T], n: Int): Seq[T] =
     (0 until n).flatMap(i => gen.apply(Gen.Parameters.default, Seed(42L + i)))
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.create(4)
 
   private val GapUs = 1800L * 1000000L
 

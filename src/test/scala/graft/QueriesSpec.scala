@@ -9,14 +9,64 @@ import org.scalatest.funsuite.AnyFunSuite
   * validity, schema/alias stability, and key invariants per operator.
   */
 class QueriesSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.create(4)
 
   val dir = "/root/testdata/sf0.001"
+
+  test("Tables schema memo: a repeat load runs no job; a rewrite or the nanos conf re-infers") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    import org.apache.spark.sql.types.LongType
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def jobsOf[T](f: => T): (T, Int) = {
+      org.apache.spark.TestBus.drain(sc)
+      jobs.set(0)
+      val r = f
+      org.apache.spark.TestBus.drain(sc)
+      (r, jobs.get)
+    }
+    val d = java.nio.file.Files.createTempDirectory("tables-memo").toString
+    val nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    val nanosWas = spark.conf.get(nanos)
+    sc.addSparkListener(counter)
+    try {
+      spark.range(3).selectExpr("id AS a").write.parquet(s"$d/t.parquet")
+      val (s1, n1) = jobsOf(Tables.load(spark, d, "t").schema)
+      assert(n1 > 0, "the first load infers the schema with a job")
+      System.gc()
+      val (s2, n2) = jobsOf(Tables.load(spark, d, "t").schema)
+      assert(n2 == 0 && s2 == s1, s"repeat load ran $n2 jobs or changed schema: $s2")
+
+      spark.range(5).selectExpr("id AS a", "'x' AS b")
+        .write.mode("overwrite").parquet(s"$d/t.parquet")
+      val t = Tables.load(spark, d, "t")
+      assert(t.schema.fieldNames.toSeq == Seq("a", "b"), s"stale schema: ${t.schema}")
+      assert(t.count() == 5, "stale file listing")
+
+      // events.ts is typed by the nanos conf: LONG under the shim, refused
+      // without it — a memo keyed on the path alone would serve LONG to both
+      val schema = MessageTypeParser.parseMessageType(
+        "message m { required int64 ts (TIMESTAMP(NANOS,true)); }")
+      val w = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(s"$d/n.parquet"))
+        .withType(schema).withConf(sc.hadoopConfiguration).build()
+      w.write(new SimpleGroupFactory(schema).newGroup().append("ts", 1000L))
+      w.close()
+      spark.conf.set(nanos, "true")
+      assert(Tables.load(spark, d, "n").schema("ts").dataType == LongType)
+      spark.conf.set(nanos, "false")
+      intercept[org.apache.spark.sql.AnalysisException](Tables.load(spark, d, "n"))
+    } finally {
+      spark.conf.set(nanos, nanosWas)
+      sc.removeSparkListener(counter)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d))
+    }
+  }
 
   test("entry returns rows") {
     assert(SparkEntry.entry(spark).limit(5).count() > 0)

@@ -1,0 +1,7 @@
+package org.apache.spark
+
+/** The listener bus is private to Spark; specs that count jobs drain it
+  * so every event of the work before the call has been delivered. */
+object TestBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
