@@ -1,17 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // see GraftSession: graft's imperative agg buffers are small, so
-      // hash far past Spark's 128-group default before sort-fallback
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "262144")
-      .getOrCreate()
+    val spark = GraftSession.create(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
     // optional comma-separated key filter for single-query iteration;
     // the driver never sets it, so driver runs always cover everything.

@@ -32,8 +32,8 @@ object Checkpoints {
     * CONTEXT CREATION (it is read once by ContextCleaner). Long
     * multi-round runs (q46 up to maxIters materializations per query,
     * d26 label propagation, p66 BPE) otherwise accumulate unbounded
-    * files under the dir — set the cleaner conf in the same
-    * SparkSession.builder that sets this one, or point the dir at a
+    * files under the dir — set the cleaner conf in the same session
+    * builder that sets this one, or point the dir at a
     * storage location with a TTL/lifecycle rule (ADVICE r9).
     */
   val DirConf = "spark.graft.checkpoint.dir"

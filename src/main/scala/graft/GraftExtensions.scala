@@ -13,8 +13,9 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * function (the codegen'd kernel family plus the capped-collect
   * aggregate) is injected at session build time, before any user code
   * runs — no `GraftFunctions.register` call, no temp-function scope.
-  * Operators keep their internal `register` calls for robustness on
-  * foreign sessions; both paths share ONE builder list
+  * Without it, a caller-built session gets the functions on its first
+  * [[graft.Tables.load]], which registers them as temp functions; both
+  * paths share ONE builder list
   * ([[graft.functions.GraftFunctions.builders]]), so they cannot drift.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

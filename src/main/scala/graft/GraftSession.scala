@@ -2,13 +2,14 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory with the engine's tuned defaults.
-  *
-  * Verify/Bench (driver-run) construct their own sessions per the driver
-  * contract; this factory is for library users and tests. Shuffle
-  * partitions default to local core count — size to cluster width in
-  * production. AQE stays on for runtime coalescing and skew-join
-  * splitting.
+/** Session factory with the engine's tuned defaults — the one place a
+  * graft session's confs are decided. Verify, Bench, the tests and the
+  * test-scope tools all build their sessions here (a tool that needs a
+  * different conf sets it on the returned session). Shuffle partitions
+  * default to local core count — size to cluster width in production.
+  * AQE stays on for runtime coalescing and skew-join splitting. graft's
+  * SQL functions are registered here too, so `graft_*` SQL runs on
+  * in-memory frames before any table is loaded.
   */
 object GraftSession {
   def create(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {

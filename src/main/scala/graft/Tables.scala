@@ -56,7 +56,12 @@ object Tables {
     }
   }
 
+  /** Every operator reads its tables through here, so this is the one
+    * point that registers graft's SQL functions on the session (an
+    * idempotent weak-set check after the first load) before any kernel
+    * expression is analyzed over the returned frame. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    graft.functions.GraftFunctions.register(spark)
     val path = s"$dir/$name.parquet"
     spark.read.schema(schema(spark, path)).parquet(path)
   }

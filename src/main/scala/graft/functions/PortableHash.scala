@@ -21,9 +21,10 @@ object PortableHash {
     * SQL chain `conv(substr(md5(c),1,15),16,10)::long`, but one static
     * call with a reused per-thread digest instead of four per-row
     * allocations (fresh MessageDigest + hex string + Substring copy +
-    * Conv parse) on every corpus-grain hash site. Callers must have
-    * [[GraftFunctions.register]]ed the session (call_function resolves
-    * at analysis). */
+    * Conv parse) on every corpus-grain hash site. The frame's session
+    * must carry graft's functions — `Tables.load` registers them, as do
+    * [[graft.GraftSession]] and [[graft.GraftExtensions]]
+    * (call_function resolves at analysis). */
   def ph(c: Column): Column = call_function("graft_ph", c)
 
   val P: Long = 1000000007L

@@ -351,15 +351,6 @@ case class IvfCellsN(child: Expression, nCellsExpr: Expression)
     copy(child = l, nCellsExpr = r)
 }
 
-/** Session registration for graft's native SQL functions. Idempotent per
-  * session: operators call this defensively (any SparkSession may be
-  * passed in), but re-registration is skipped once THIS register() has
-  * run for the session — otherwise every call logs a "replaced a
-  * previously registered function" WARN per function (VERDICT r3 hygiene
-  * #3). The sentinel is a weak session-keyed set, not the presence of
-  * one particular function (ADVICE r4: a name-presence probe would skip
-  * functions appended after an older register() already ran).
-  */
 /** Native Catalyst expression for the s30 k-means assignment argmin.
   *
   * The declarative alternative — `array_min(transform(cents, c ->
@@ -596,6 +587,16 @@ case class SqXhat(first: Expression, second: Expression, third: Expression)
     copy(first = f, second = s, third = t)
 }
 
+/** Session registration for graft's native SQL functions. Idempotent per
+  * session: [[graft.Tables.load]] calls it on every load (any
+  * SparkSession may be passed in), but re-registration is skipped once
+  * THIS register() has run for the session — otherwise every call logs a
+  * "replaced a previously registered function" WARN per function
+  * (VERDICT r3 hygiene #3). The sentinel is a weak session-keyed set, not
+  * the presence of one particular function (ADVICE r4: a name-presence
+  * probe would skip functions appended after an older register() already
+  * ran).
+  */
 object GraftFunctions {
   private val registered: java.util.Set[SparkSession] =
     java.util.Collections.synchronizedSet(java.util.Collections.newSetFromMap(
@@ -603,7 +604,7 @@ object GraftFunctions {
 
   /** Name → builder for every graft SQL function — ONE definition
     * feeding both registration paths: [[register]] (temp functions on an
-    * existing session, what the operators call) and
+    * existing session, what `Tables.load` calls) and
     * [[graft.GraftExtensions]] (`spark.sql.extensions` injection at
     * session build time, the spark-submit/cluster path). */
   private[graft] val builders: Seq[(String,

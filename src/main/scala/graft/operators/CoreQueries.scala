@@ -137,7 +137,6 @@ object CoreQueries {
     * location 96 wins (row_number()==n() → here row_number over desc).
     */
   def q08LastPerKey(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // graft_last_by2 (functions/ArgMax.scala), not max_by(struct) and
     // not a winner-ts join-back (r17, the r16 orderAssembly finding
     // applied here): max_by's struct buffer is not UnsafeRow-mutable,
@@ -912,7 +911,6 @@ object CoreQueries {
   }
 
   def q65ApproxAgg(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     import graft.functions.PortableHash
     val li = Tables.lineitem(spark, dir)
       .select(col("l_returnflag"), col("l_quantity").cast("long").as("qty"),

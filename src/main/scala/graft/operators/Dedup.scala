@@ -24,7 +24,6 @@ object Dedup {
     * generate_series returns empty — semantics differ, so filter).
     */
   private[graft] def shingled(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // shingling + minhash kernels fuse onto this scan — rebalance so a
     // single-row-group file doesn't serialize the band family's
     // heaviest pass on one core (no-op on a real lake layout)
@@ -47,7 +46,6 @@ object Dedup {
     * cluster resolution). Unsorted; callers add presentation order.
     */
   private[operators] def minhashBandPairs(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     minhashBandPairsOf(shingled(spark, dir))
   }
 
@@ -85,7 +83,6 @@ object Dedup {
     * bytes, never a list), and zero join. */
   private[graft] def minhashBandPairsOf(sh: DataFrame,
       pairOnly: Option[Column] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(sh.sparkSession)
     // pairOnly (d38's eval harness): the CAP must see the full corpus —
     // bucket survival is a property of the production index, so a
     // sample predicate may not prune the scan — but only docs matching
@@ -347,7 +344,6 @@ object Dedup {
     */
   def simhashPairs(simsRaw: DataFrame, blocks: Int = SimBlocks,
       blockBits: Int = SimBlockBits, maxHamming: Int = SimMaxHamming): DataFrame = {
-    graft.functions.GraftFunctions.register(simsRaw.sparkSession)
     // ONE aggregation to the signature grain carries the whole operator:
     // bySig = (simhash, member doc ids) with over-[[SimClassCap]] classes
     // evaluating to null inside graft_collect_capped (bounded buffers —
@@ -409,7 +405,6 @@ object Dedup {
     * guard; their docs are d21/d26's exact-dup job).
     */
   def d23Simhash(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // single-pass 48-bit signature per document — replaces the
     // token × bit-position explode (millions of rows, two shuffles).
     // The r13 "no rebalance" adjudication is obsolete: it protected the
@@ -459,7 +454,6 @@ object Dedup {
     // was measured ~40% slower again (r4) — this corpus is near-dup
     // dense, so posting lists are long and ObjectHashAggregate's list
     // buffers cost more than the SMJ the window's sort already feeds
-    graft.functions.GraftFunctions.register(spark)
     // graft_shingle_hashes3 hashes each distinct shingle INSIDE the
     // expression, so the explode emits fixed-width int64s and no shingle
     // string ever reaches the shuffle (VERDICT r3 #1: the string column
@@ -511,7 +505,6 @@ object Dedup {
     * array intersection (exact columns only). Nothing is all-pairs.
     */
   def d36SigJaccard(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     import graft.functions.PortableHash.NumMinhash
     val docs = shingled(spark, dir)
       .select(col("doc_id"),
@@ -570,7 +563,6 @@ object Dedup {
     */
   def d27IncrementalDedup(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(spark)
     val isBatch = pmod(col("doc_id"), lit(IncrementalBatchMod)) === 0
     val withH = Tables.documents(spark, dir).withColumn("h", md5(col("text")))
     val corpusH = withH.filter(!isBatch).select(col("h")).distinct()
@@ -655,7 +647,6 @@ object Dedup {
     * drive constructed mid-Jaccard corpora (the synthetic corpus's
     * near-dups all sit in the 0.9+ bands) through the production plan. */
   private[graft] def d38LshRecallCore(documents: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     val sh = documents
       .withColumn("words", split(col("text"), " "))
       .filter(size(col("words")) >= 3)
@@ -700,7 +691,6 @@ object Dedup {
   /** The (doc_id, content-hash, bloom-key) projection SHARED by d37 and
     * st45 — one key definition for filter build, probe, and exact truth. */
   private[graft] def bloomDocs(documents: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     documents.select(col("doc_id"), md5(col("text")).as("h"),
       (ph(col("text")) % P).as("x"))
   }
@@ -785,7 +775,6 @@ object Dedup {
     */
   def d25EmbedNeardup(spark: SparkSession, dir: String,
       maxBlock: Int = EmbedBlockCap): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val maxBlockSize = Tables.embeddings(spark, dir)
       .groupBy("label").agg(count(lit(1)).as("n"))
       .agg(coalesce(max(col("n")), lit(0L))).head().getLong(0)
@@ -835,7 +824,6 @@ object Dedup {
     * measured by s29's recall harness.
     */
   def d28EmbedCellDedup(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val nVec = Tables.embeddings(spark, dir).count()
     val nCells = math.max(16L, math.ceil(math.sqrt(nVec.toDouble)).toLong)
     // The cell assignment is COMPUTE-bound (nlist·dims ops/row), so the
@@ -891,14 +879,13 @@ object Dedup {
     * doc. ONE definition so the detector (d29) and the scorer (d30) can
     * never drift apart on the window family. */
   private def spanPostings(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     spanPostingsCore(Tables.documents(spark, dir))
   }
 
   /** Posting grain over any (doc_id, text) frame — extracted so the
     * skew-split demonstration (PlanSpec) can drive a synthetic hot-span
-    * corpus through the exact production plan. Caller must have
-    * registered [[graft.functions.GraftFunctions]] on the session. */
+    * corpus through the exact production plan. The frame's session must
+    * carry [[graft.functions.GraftFunctions]] (see [[graft.Tables.load]]). */
   private[graft] def spanPostingsCore(documents: DataFrame): DataFrame =
     // window-hash kernel fuses onto the scan — rebalance (gated; no-op
     // for tests' parallelize frames and real lake layouts)
@@ -952,7 +939,6 @@ object Dedup {
     * free. Both aggregations partial-combine.
     */
   def d30SpanScore(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     d30SpanScoreCore(Tables.documents(spark, dir))
   }
 
@@ -1023,7 +1009,6 @@ object Dedup {
     * shrinks by the cut fraction.
     */
   def d32SpanCut(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val K = CutChunkTokens
     val chunks = Tables.rebalanceSmallScan(Tables.documents(spark, dir))
       .select(col("doc_id"), split(coalesce(col("text"), lit("")), " ").as("words"))
@@ -1090,13 +1075,12 @@ object Dedup {
     * further shuffle). Window state is W rows. Per-doc output row.
     */
   def d33Winnow(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     d33WinnowCore(Tables.documents(spark, dir))
   }
 
   /** Winnowing over any (doc_id, text) frame — extracted so the property
     * test can drive random corpora through the exact production plan.
-    * Caller must have registered [[graft.functions.GraftFunctions]]. */
+    * The frame's session must carry [[graft.functions.GraftFunctions]]. */
   private[graft] def d33WinnowCore(documents: DataFrame): DataFrame = {
     val W = WinnowWindow
     val hp = Tables.rebalanceSmallScan(documents)
@@ -1152,7 +1136,6 @@ object Dedup {
     * equi-join directly: [[connectedComponents]]' localCheckpoint
     * truncates lineage, so the final d34 plan cannot show this join. */
   private[graft] def d34Pairs(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val asg = Similarity.kmeansAssign(spark, dir)
       .select(col("vec_id"), col("cid"), col("dist"))
     // raw-float cosine on the d25/d28 pattern (codegen'd graft_dot +
@@ -1171,7 +1154,6 @@ object Dedup {
   }
 
   def d34Semdedup(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val asg = Similarity.kmeansAssign(spark, dir)
       .select(col("vec_id"), col("cid"), col("dist"))
     val pairs = d34Pairs(spark, dir)

@@ -202,7 +202,6 @@ object Multimodal {
     * payload×payload and never a join.
     */
   def m35PayloadChunkdup(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // the chunk-fingerprint kernel fuses onto the scan — rebalance so a
     // single-row-group file doesn't serialize it on one core
     val chunks = Tables.rebalanceSmallScan(Tables.documents(spark, dir))
@@ -300,7 +299,6 @@ object Multimodal {
     * LAION's 0.28).
     */
   def m37PairAlign(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val cap = Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"),
         expr("graft_hash_vec(split(coalesce(text, ''), ' '))").as("tv"))

@@ -62,7 +62,6 @@ object Pipeline {
     * split from any other hash-based sampling on doc_id.
     */
   def p56StratifiedSplit(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val rates = SplitRates.toDF("lang", "test_pm", "val_pm")
     Tables.documents(spark, dir)
@@ -98,7 +97,6 @@ object Pipeline {
     * the SOURCE grain. Output is the per-source mix report.
     */
   def p57SourceMix(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
     val counts = docs.groupBy("source").agg(count(lit(1)).as("n_input"))
       .withColumn("n_total", sum(col("n_input")).over(Window.partitionBy()))
@@ -141,7 +139,6 @@ object Pipeline {
     * chunk boundaries, never a float cumsum.
     */
   def p58SeqPack(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val L = PackChunkTokens
     val w = Window.partitionBy("source").orderBy("doc_id")
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -185,7 +182,6 @@ object Pipeline {
     * in-partition sort.
     */
   def p59ShardShuffle(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.documents(spark, dir)
       .select(col("doc_id"),
         ph(concat_ws(":", lit("shard"), col("doc_id"))).as("k"))
@@ -221,7 +217,6 @@ object Pipeline {
     * shape, like t33/t34.
     */
   def p61ChunkOverlap(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val L = ChunkTokens; val S = ChunkStride
     Tables.documents(spark, dir)
       .select(col("doc_id"), split(coalesce(col("text"), lit("")), " ").as("words"))
@@ -295,7 +290,6 @@ object Pipeline {
     * the oracle's single-window restatement.
     */
   def p63TokenBudget(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val B = BudgetBuckets
     val wIn = Window.partitionBy("source", "bucket").orderBy("okey", "doc_id")
     // the ONE corpus pass: row grain + within-bucket running token sum.
@@ -366,7 +360,6 @@ object Pipeline {
   /** Rule core over any (doc_id, text) frame — extracted so property
     * tests can drive random corpora through the exact production plan. */
   private[graft] def p60VocabCore(documents: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     // per-doc token counts complete inside graft_token_counts (r12, the
     // t35 kernel): the vocabulary aggregation reads (doc, DISTINCT
     // token, c) rows instead of raw occurrences, n_docs is a plain
@@ -403,7 +396,6 @@ object Pipeline {
   }
 
   def p55CorpusClean(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // the lang/quality/minhash kernel chain fuses onto this scan —
     // rebalance (gated; no-op on a real lake layout)
     val base = Tables.rebalanceSmallScan(Tables.documents(spark, dir))
@@ -464,7 +456,6 @@ object Pipeline {
     * arithmetic, scaled grid).
     */
   def p64TemperatureMix(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"),
         // graft_ws_token_count ≡ size(split(·, ' ')) without the array (r18)
@@ -720,7 +711,6 @@ object Pipeline {
     p68BpeEncodeCore(Tables.documents(spark, dir))
 
   private[graft] def p68BpeEncodeCore(documents: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     // the ≤K-row learn table folds to ONE row (sort_array keeps rank
     // order — merges MUST apply in learned order) and rides a broadcast
     // cross join; the graft_bpe_apply kernel then performs the
@@ -855,7 +845,6 @@ object Pipeline {
   /** Rule core over any (doc_id, text) frame — property tests drive
     * constructed target/raw corpora through the production plan. */
   private[graft] def p69DsirCore(documents: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     val B = DsirBuckets
     // the whole per-doc (feature, count) pre-aggregate folds inside the
     // codegen'd graft_feat_counts kernel — ONE pass per doc against a
@@ -932,7 +921,6 @@ object Pipeline {
     * (p56's discipline).
     */
   def p71LeakageSafeSplit(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val comp = Dedup.nearDupComponents(spark, dir)
     Tables.documents(spark, dir).select("doc_id")
       .join(comp, Seq("doc_id"), "left")

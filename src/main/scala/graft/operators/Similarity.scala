@@ -23,7 +23,6 @@ object Similarity {
     * `embedding::DOUBLE[]` cast, with no interpreted lambdas in the path.
     */
   private def vecs(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.embeddings(spark, dir)
       .withColumn("norm", sqrt(expr("graft_dot(embedding, embedding)")))
       .select(col("vec_id"), col("label"), col("embedding").as("v"), col("norm"))
@@ -246,7 +245,6 @@ object Similarity {
     * CodegenFallback, paying per-element closure dispatch on the corpus
     * grain at EVERY ANN family entry point. */
   private[graft] def quantize(emb: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     emb.select(col("vec_id"),
       call_function("graft_quantize_vec", col("embedding")).as("q"))
   }
@@ -266,7 +264,6 @@ object Similarity {
 
   /** Final (vec_id, q, cid, dist) after 2 Lloyd iterations. */
   private[graft] def kmeansAssign(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val q = quantize(Tables.embeddings(spark, dir))
     assignStep(q, kmeansModel(q))
   }
@@ -312,7 +309,6 @@ object Similarity {
     * N·K explode); the report partial-aggregates to ≤K rows per task.
     */
   def s31Silhouette(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val q = quantize(Tables.embeddings(spark, dir))
     val model = kmeansModel(q) // ONE model subtree feeds assignment AND b(i)
     val asg = assignStep(q, model)
@@ -414,7 +410,6 @@ object Similarity {
     * set, the s29/q49 measured-error pattern).
     */
   def s32PqAdc(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     import org.apache.spark.sql.expressions.Window
     val q = quantize(Tables.embeddings(spark, dir))
     val model = packPq(pqCodebook(q))
@@ -491,7 +486,6 @@ object Similarity {
     * argmin, one codebook.
     */
   def s33IvfPq(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     import org.apache.spark.sql.expressions.Window
     val q = quantize(Tables.embeddings(spark, dir))
     val model = packPq(pqCodebook(q))
@@ -573,7 +567,6 @@ object Similarity {
     call_function("graft_sq_xhat", col("q"), col("lo"), col("hi"))
 
   def s34SqAnn(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     import org.apache.spark.sql.expressions.Window
     val dim = PqM * PqDim
     // quantization + the argmin scoring kernels fuse onto the scan —
@@ -655,7 +648,6 @@ object Similarity {
     * sharing discipline). */
   private[graft] def s36HashVecCore(spark: SparkSession, documents: DataFrame,
       depth: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     import org.apache.spark.sql.expressions.Window
     val e = documents
       .withColumn("words", split(coalesce(col("text"), lit("")), " "))
@@ -740,7 +732,6 @@ object Similarity {
     * inside one expression tree, and nothing driver-side touches data.
     */
   def s38Mmr(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     import org.apache.spark.sql.expressions.Window
     val ppm = (c: Column) => floor(c * 1000000d + 0.5d).cast("long")
     val cands = s26Core(spark, dir, MmrPool)

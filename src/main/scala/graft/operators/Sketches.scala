@@ -140,7 +140,6 @@ object Sketches {
   }
 
   def q49HllSketch(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val two53 = 1L << (HllPatternBits + 1) // 2^53, the Z unit scale
     // ONE corpus pass (r12, VERDICT r11 item 4): explode to tokens and
     // reduce straight to the DISTINCT (source, token) grain — registers
@@ -235,7 +234,6 @@ object Sketches {
     * never re-reads history.
     */
   def q69IncrRollup(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val keys = Seq("event_type", "day")
     // NO scan rebalance here (tried r13): the event rows are wide
     // enough that exchanging 1M of them cost more than the single-task
@@ -341,7 +339,6 @@ object Sketches {
     * window position — eval-only, droppable in production.
     */
   def q61SlidingDistinct(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     import org.apache.spark.sql.expressions.Window
     val pb1 = HllPatternBits + 1
     val two53 = 1L << pb1
@@ -460,7 +457,6 @@ object Sketches {
     * distinct; everything downstream of the sketches is constant-size.
     */
   def q66KmvOverlap(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val k = KmvK
     val sh = Tables.documents(spark, dir)
       .withColumn("words", split(col("text"), " "))

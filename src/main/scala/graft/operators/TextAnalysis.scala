@@ -34,7 +34,6 @@ object TextAnalysis {
     // all five profile scores in ONE codegen'd pass over the token
     // array (the five interpreted size(filter(...)) chains measured
     // 3.4 s at sf1 on t38 — see graft.functions.StopScores)
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df
     .withColumn("graft_ls", expr("graft_stop_scores(words)"))
     .withColumn("s_en", col("graft_ls").getItem(0))
@@ -84,7 +83,6 @@ object TextAnalysis {
   private[operators] def withQualityScore(df: DataFrame): DataFrame = {
     // the en-profile count comes from the same codegen'd kernel the
     // language chain uses (element 0) — not an interpreted filter
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df
     .withColumn("n_chars_m", length(col("text")).cast("long"))
     .withColumn("n_words", size(col("words")).cast("long"))
@@ -118,12 +116,11 @@ object TextAnalysis {
     * corpus-level distinct) joined on the blocking key.
     */
   def t30Tokencount(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
     // token counting never materializes the token array (r18):
     // graft_ws_token_count is a byte scan (#spaces + 1 ≡ size(split)
     // at limit −1, empties included), halving this branch at sf10
-    // (4.45 → 2.54 s in ProbeR18)
+    // (4.45 → 2.54 s)
     val perSource = docs
       .select(col("source"), col("text"),
         expr("graft_ws_token_count(text)").as("nt"))
@@ -153,7 +150,6 @@ object TextAnalysis {
     * a fingerprint iff vocabularies match.
     */
   def t31Fingerprint(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // per-doc sort+hash fuses onto the scan — rebalance (gated)
     Tables.rebalanceSmallScan(Tables.documents(spark, dir))
       .withColumn("fp", ph(expr(
@@ -185,7 +181,6 @@ object TextAnalysis {
     * materialized into the plan — same posture as d24.
     */
   def t32Contamination(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val sh = Tables.rebalanceSmallScan(Tables.documents(spark, dir))
       .withColumn("words", split(col("text"), " "))
       .filter(size(col("words")) >= 3)
@@ -244,7 +239,6 @@ object TextAnalysis {
     * parallel.
     */
   def t33PiiScrub(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // the scrub kernel is the whole cost and fuses onto the scan — a
     // single-row-group file would serialize it on one core
     // (Tables.rebalanceSmallScan: no-op on a real lake layout)
@@ -313,7 +307,6 @@ object TextAnalysis {
     * bigrams and are excluded on both engines by the same predicate.
     */
   def t34Repetition(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     sortedByDoc(Tables.documents(spark, dir), "text")
       .withColumn("words", split(col("text"), " "))
       .filter(size(col("words")) >= 2)
@@ -360,7 +353,6 @@ object TextAnalysis {
   /** Rule core over any (doc_id, text) frame — extracted so property
     * tests can drive random corpora through the exact production plan. */
   private[graft] def t35KeywordsCore(documents: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     // tf completes PER DOCUMENT inside the codegen'd graft_token_counts
     // kernel (r12; the bigram_counts/t36 discipline) — occurrence rows
     // never exist in the plan. The ONE corpus exchange (kept from the
@@ -452,7 +444,6 @@ object TextAnalysis {
     * every doc with >= 2 words; shared with t43's bucket split (one
     * scoring definition, the withPredLang discipline). */
   private[graft] def t36Scores(documents0: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(documents0.sparkSession)
     // both passes are kernel-heavy per-doc walks fused onto the scan —
     // the single-row-group bench file would serialize them on one core
     // (Tables.rebalanceSmallScan: no-op on a real lake layout)
@@ -578,10 +569,6 @@ object TextAnalysis {
   /** Sketch core over any (doc_id, text) frame — extracted so property
     * tests can drive random corpora through the exact production plan. */
   private[graft] def t37CmsCore(documents: DataFrame): DataFrame = {
-    // register on the INPUT's session (r13, ADVICE r12 item 1): cmsBucket
-    // resolves graft_ph at analysis time, and a fresh session (driver
-    // running only t37) has no earlier operator to register it.
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     val tf = documents
       .withColumn("words", split(coalesce(col("text"), lit("")), " "))
       .select(explode(col("words")).as("token"))
@@ -703,7 +690,6 @@ object TextAnalysis {
     * the kernel runs once per row.
     */
   def t40Entropy(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     t40EntropyCore(Tables.documents(spark, dir))
   }
 
@@ -801,7 +787,6 @@ object TextAnalysis {
     * random corpora through the production plan; s37 fuses the same
     * ranking at its own depth. */
   private[graft] def t41Bm25Core(documents: DataFrame, depth: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     val base = documents.filter(col("doc_id").isNotNull)
     // query term bags from their OWN pushed-filter scan (doc_id < 10
     // reaches the parquet row groups) — tiny, broadcast everywhere

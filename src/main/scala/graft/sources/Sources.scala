@@ -264,7 +264,7 @@ object Sources {
     // ONE importer connection: a 4-way parallel-connection variant
     // measured FLAT at sf10 (4.70 vs 4.71 s — embedded Derby serializes
     // append-mode imports internally), so the simple loop stays. Per
-    // the r18 decomposition (ProbeR18 q57 arms at sf10): csv write
+    // the r18 decomposition (q57 arms at sf10): csv write
     // 1.11 s, bulk import of 31 shards / 1.14M rows 2.65 s, JDBC
     // read-back 0.66 s.
     val conn = java.sql.DriverManager.getConnection(DerbyUrl)

@@ -202,7 +202,6 @@ object Streams {
     * uses complete mode, st36's harness shape).
     */
   def st38StreamCorpusAdmit(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val isBatch = pmod(col("doc_id"), lit(graft.operators.Dedup.IncrementalBatchMod.toLong)) === 0L
     val docs = graft.Tables.documents(spark, dir)
     val corpusH = docs.filter(!isBatch)
@@ -293,7 +292,6 @@ object Streams {
     * distances mean the oracle reproduces every value bit-for-bit.
     */
   def st40StreamClusterAssign(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     import graft.operators.Similarity
     val standing = Similarity.quantize(
       graft.Tables.embeddings(spark, dir)
@@ -572,7 +570,6 @@ object Streams {
     * are order-independent, so arrival order cannot change the output.
     */
   def st43StreamHeavyHitters(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     import graft.operators.TextAnalysis
     val isNew = pmod(col("doc_id"),
       lit(graft.operators.Dedup.IncrementalBatchMod.toLong)) === 0L
@@ -655,7 +652,6 @@ object Streams {
     * device).
     */
   def st46StreamRollup(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     import graft.operators.Sketches
     val stream = Sketches.q69Projection(eventsStream(spark, dir))
       .groupBy("event_type", "day", "bucket")
@@ -685,7 +681,6 @@ object Streams {
     * batch report row-for-row (spec-pinned) — the q62/st42 discipline.
     */
   def st44StreamDrift(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     import graft.operators.TextAnalysis
     val isNew = pmod(col("doc_id"),
       lit(graft.operators.Dedup.IncrementalBatchMod.toLong)) === 0L
@@ -806,7 +801,6 @@ object Streams {
     * deterministic and the DuckDB oracle restates it batch-side.
     */
   def st48StreamCentroidUpdate(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     import graft.operators.Similarity
     val standing = Similarity.quantize(
       graft.Tables.embeddings(spark, dir)

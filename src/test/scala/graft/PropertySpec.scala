@@ -113,7 +113,6 @@ class PropertySpec extends AnyFunSuite {
     // and the contract survives partial aggregation + merge across many
     // partitions (the path where a buffer that already overflowed merges
     // into one that hasn't)
-    graft.functions.GraftFunctions.register(spark)
     import org.apache.spark.sql.functions._
     val cap = 5
     // group 1: exactly cap ids; group 2: cap+1; group 3: one id;
@@ -147,7 +146,6 @@ class PropertySpec extends AnyFunSuite {
     // stable under partial aggregation + merge across many partitions
     // (the serde path) — plus the UTF8String-clone hazard: the buffer
     // must not alias the scan's reused row memory
-    graft.functions.GraftFunctions.register(spark)
     import org.apache.spark.sql.functions._
     val rows = Seq(
       // group 1: plain max on k1
@@ -510,7 +508,6 @@ class PropertySpec extends AnyFunSuite {
   test("graft_ivf_cells_n(v, 16) is exactly graft_ivf_cells(v) on real vectors") {
     // the parameterized corpus-sized variant must be a strict
     // generalization of the fixed query-index expression
-    graft.functions.GraftFunctions.register(spark)
     import org.apache.spark.sql.functions._
     val mismatches = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(expr("graft_ivf_cells(embedding)").as("fixed"),
@@ -524,7 +521,6 @@ class PropertySpec extends AnyFunSuite {
     // the codegen'd primitive loop replaced array_min(transform(...))
     // for speed — the two formulations must stay value-identical,
     // including the d·100+cid key encoding and tie-breaks
-    graft.functions.GraftFunctions.register(spark)
     import org.apache.spark.sql.functions._
     val q = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id"),
@@ -549,7 +545,6 @@ class PropertySpec extends AnyFunSuite {
     // the codegen'd single-pass kernel replaced five interpreted
     // size(filter(words, w -> w in (...))) chains — value parity with
     // the declarative formulation must hold for every profile
-    graft.functions.GraftFunctions.register(spark)
     import org.apache.spark.sql.functions._
     val profiles = graft.functions.TextHash.StopProfiles
     val rnd = new scala.util.Random(7)
@@ -576,7 +571,6 @@ class PropertySpec extends AnyFunSuite {
     // array_distinct(split(text,' ')) with byte-scan passes — the
     // identities must hold including interior/trailing empties,
     // empty string, and multibyte text (no 0x20 inside UTF-8 tails)
-    graft.functions.GraftFunctions.register(spark)
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val rnd = new scala.util.Random(18)
@@ -594,7 +588,6 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("graft_chunk_fps matches an in-memory reference on random byte payloads") {
-    graft.functions.GraftFunctions.register(spark)
     import java.security.MessageDigest
     val C = graft.functions.PortableHash.ChunkdupC
     def refFps(payload: Array[Byte]): Seq[Long] = {
@@ -929,7 +922,6 @@ class PropertySpec extends AnyFunSuite {
       val schema = StructType(Seq(StructField("words", ArrayType(StringType))))
       val df = spark.createDataFrame(
         spark.sparkContext.parallelize(Seq(Row(toks)), 1), schema)
-      graft.functions.GraftFunctions.register(spark)
       val got = df.selectExpr("graft_hash_vec(words)").head.getSeq[Double](0)
       assert(got.toArray.toSeq === expected.toSeq, s"tokens: $toks")
     }
@@ -996,7 +988,6 @@ class PropertySpec extends AnyFunSuite {
     // band bucket per band — without the cap that's (cap+10)²/2 pairs
     // from pure boilerplate (the 100 TB quadratic); with it, zero. Two
     // genuine near-dups in their own bucket of 2 must still pair.
-    graft.functions.GraftFunctions.register(spark)
     import org.apache.spark.sql.functions._
     val boiler = "terms of service apply to all users of this site"
     // byte-identical pair: every band matches by construction, so the
@@ -1119,7 +1110,6 @@ class PropertySpec extends AnyFunSuite {
       val model = df.agg(
         array((1 to 4).map(i => min(element_at(col("q"), i))): _*).as("lo"),
         array((1 to 4).map(i => max(element_at(col("q"), i))): _*).as("hi"))
-      graft.functions.GraftFunctions.register(spark)
       val rows = df.crossJoin(broadcast(model))
         .select(col("q"), col("lo"), col("hi"),
           operators.Similarity.sqXhat.as("xhat"))
@@ -1169,7 +1159,6 @@ class PropertySpec extends AnyFunSuite {
   test("distinct graft_window_hashes(w=3) equals graft_shingle_hashes3 on real docs") {
     // the stride-1 window family at w=3, deduped in first-occurrence
     // order, must be exactly the distinct-3-gram hash family d24/t32 use
-    graft.functions.GraftFunctions.register(spark)
     import org.apache.spark.sql.functions._
     val mismatches = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .withColumn("words", split(col("text"), " "))
@@ -1184,7 +1173,6 @@ class PropertySpec extends AnyFunSuite {
   test("graft_window_hashes rejects widths outside [1, Int.MaxValue] at analysis") {
     // 4294967298L wraps to 2 under a blind intValue() truncation — it must
     // fail analysis, not silently compute width-2 window hashes
-    graft.functions.GraftFunctions.register(spark)
     import org.apache.spark.sql.functions._
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .withColumn("words", split(col("text"), " "))
@@ -1261,7 +1249,6 @@ class PropertySpec extends AnyFunSuite {
     val W = operators.Dedup.WinnowWindow
     val mask = operators.Dedup.WinnowHashMask
     val posW = 1L << operators.Dedup.WinnowPosBits
-    graft.functions.GraftFunctions.register(spark)
     samples(winnowCorpusGen, 20).filter(_.nonEmpty).foreach { docs =>
       val schema = StructType(Seq(
         StructField("doc_id", LongType), StructField("text", StringType)))
@@ -1292,7 +1279,6 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("t40 entropy kernel matches an in-memory reference on adversarial texts") {
-    graft.functions.GraftFunctions.register(spark)
     val wordGen = Gen.oneOf("the", "cat", "日本語", "aa", "", "x", "éß")
     val textGen = for {
       n <- Gen.choose(0, 12)
@@ -1607,7 +1593,6 @@ class PropertySpec extends AnyFunSuite {
 
   test("graft_ph equals the md5/conv SQL chain on random strings") {
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     val sGen = Gen.oneOf(
       Gen.listOf(Gen.alphaNumChar).map(_.mkString),
       Gen.listOf(Gen.oneOf('a', 'Z', '0', '9', ' ', 'é', '中', '@', '.')).map(_.mkString))
@@ -1626,7 +1611,6 @@ class PropertySpec extends AnyFunSuite {
   test("graft_pii_scrub equals the regexp_count/regexp_replace chain on adversarial text") {
     import org.apache.spark.sql.functions._
     import graft.operators.TextAnalysis.{EmailPat, SsnPat, PhonePat}
-    graft.functions.GraftFunctions.register(spark)
     // fragments chosen to stress the email scanner's backtracking
     // (domain-run failures, @-chains, short TLDs), SSN/phone boundary
     // shapes, and overlaps between the three patterns
@@ -1671,7 +1655,6 @@ class PropertySpec extends AnyFunSuite {
 
   test("graft_quantize_vec equals the transform(floor(x*1e6)) chain on random vectors") {
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     val vGen = Gen.listOfN(8, Gen.chooseNum(-10.0f, 10.0f))
     samples(vGen, 60).foreach { v =>
       val df = spark.createDataFrame(
@@ -1688,7 +1671,6 @@ class PropertySpec extends AnyFunSuite {
 
   test("graft_hll_rho equals the bin()-length chain across the 60-bit domain") {
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     val pb1 = graft.functions.PortableHash.HllPatternBits + 1
     val wGen = Gen.oneOf(Gen.const(0L), Gen.const(1L),
       Gen.const((1L << 52) - 1), Gen.choose(0L, (1L << 52) - 1),

@@ -73,7 +73,6 @@ class QueriesSpec extends AnyFunSuite {
   }
 
   test("graft_tf_in counts restricted terms, first-occurrence order, cloned output") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     // term arrays built via split(): Seq-to-DF arrays carry
     // containsNull=true, which the expression's type check rejects by
@@ -101,18 +100,7 @@ class QueriesSpec extends AnyFunSuite {
     assert(vary.toList === List(List("a"), List("b"), List("a")))
   }
 
-  test("t37 resolves on a fresh session (driver SPARK_GRAFT_ONLY path)") {
-    // ADVICE r12 item 1: cmsBucket resolves graft_ph at analysis time;
-    // a session with no prior operator run has an empty registry. A
-    // newSession() has its own FunctionRegistry, reproducing the
-    // driver's single-query invocation.
-    val s = spark.newSession()
-    val out = graft.operators.TextAnalysis.t37CmsFreq(s, dir)
-    assert(out.limit(1).count() == 1)
-  }
-
   test("graft_bpe_apply symbolization ≡ the regexp formulation it replaced") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     // line terminators are the Java-regex `(.)` edge: regexp_replace
     // leaves them un-spaced, and the kernel must reproduce that exactly
@@ -159,14 +147,21 @@ class QueriesSpec extends AnyFunSuite {
     assert(dangling.isEmpty, s"oracles without query: $dangling")
   }
 
+  // each key runs on its own newSession(): an empty function registry,
+  // as in a driver run of that key alone, so an operator reaches graft's
+  // SQL functions only through the Tables.load hook; the session still
+  // shares the SparkContext's confs, so it plans as measured
   for ((name, fn) <- SparkEntry.queries) {
     test(s"$name executes and is non-degenerate") {
-      val df = fn(spark, dir)
+      val s = spark.newSession()
+      assert(s.conf.get("spark.sql.objectHashAggregate.sortBased.fallbackThreshold") == "262144")
+      assert(s.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+      val df = fn(s, dir)
       val n = df.count()
       assert(n >= 0)
       assert(df.columns.nonEmpty)
       // deterministic: same plan executed twice yields same count
-      assert(fn(spark, dir).count() === n)
+      assert(fn(s, dir).count() === n)
     }
   }
 
@@ -505,7 +500,6 @@ class QueriesSpec extends AnyFunSuite {
   }
 
   test("graft_token_counts: distinct counts, first-occurrence order, cloned output") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val rows = Seq(
       "b a c a b a",  // counts + first-occurrence order (b, a, c)

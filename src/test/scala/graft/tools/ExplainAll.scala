@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps the formatted physical plan of every SparkEntry query to a
   * markdown file (docs/PLANS.md) — the `.explain("formatted")` review
   * artifact for plan-quality auditing: PushedFilters, ReadSchema
@@ -14,12 +12,7 @@ import org.apache.spark.sql.SparkSession
 object ExplainAll {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outPath) = args
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.create(4)
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     sb.append("# Physical plans (sf=" + sfDir + ", local[4], AQE off for readability)\n\n")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measured skew exercise for d30's salted hot-span probe (SURVEY §5).
@@ -22,14 +21,8 @@ object SkewDemo {
     val nDocs = if (args.length > 0) args(0).toLong else 400000L
     val hotPm = if (args.length > 1) args(1).toInt else 300
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.create(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
     val w = operators.Dedup.SpanTokens
     val license = (1 to w).map(i => s"license$i").mkString(" ")
     // hot docs: the shared license span + 2 unique tokens (3 windows);

@@ -4,7 +4,9 @@
 Reads the Verify output dir (spark result parquet per query +
 oracle_sql.json), runs each oracle SQL in DuckDB against the testdata
 parquet tables, and compares: row count, column names, and values
-(columns sorted by name, rows sorted by all columns).
+(columns sorted by name, rows sorted by all columns). A key named in
+Verify's failures.json fails with the error it threw, whatever output
+an earlier run left in its directory.
 
 Usage: tools/check.py <sfDir> <verifyOutDir>
 """
@@ -37,11 +39,15 @@ def main(sf_dir: str, out_dir: str) -> None:
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    fpath = f"{out_dir}/failures.json"
+    failures = json.load(open(fpath)) if os.path.exists(fpath) else {}
     n_pass = n_fail = 0
     for name in sorted(oracle):
         sql = oracle[name]
         spark_dir = f"{out_dir}/{name}"
         files = glob.glob(f"{spark_dir}/*.parquet")
+        if name in failures:
+            print(f"FAIL {name}: {failures[name]}"); n_fail += 1; continue
         if not files:
             print(f"FAIL {name}: no spark output"); n_fail += 1; continue
         try:

@@ -12,8 +12,9 @@ import org.apache.spark.sql.SparkSession
   *
   * Leg 1 resolves graft kernels via pure SQL BEFORE any graft.* operator
   * code runs, so the only way the functions can exist is the extensions
-  * injection itself (operators self-heal via internal register calls,
-  * which would mask a broken injection if an operator ran first).
+  * injection itself (the first table load registers them as temp
+  * functions, which would mask a broken injection if an operator ran
+  * first).
   * Leg 2 runs kernel-dependent operators end-to-end through the
   * SparkEntry boundary on the same session.
   */

@@ -1,7 +1,13 @@
 #!/usr/bin/env python3
-"""Cross-check a BENCH/BASELINE sweep against docs/FLOORS.json and the
-pair records (VERDICT r13 item 4): every comparable sweep row over the
-bar must either (a) carry a current fresh-JVM pair record <= bar (the
+"""Summarize a BENCH/BASELINE sweep pair, then cross-check it against
+docs/FLOORS.json and the pair records.
+
+The summary comes first: raw totals, the comparable-surface totals
+(structural rows in EXCLUDE left out), their ratio, the win count and
+the ten worst comparable ratios.
+
+The adjudication follows (VERDICT r13 item 4): every comparable sweep
+row over the bar must either (a) carry a current fresh-JVM pair record <= bar (the
 pair protocol is the standing per-row evidence - sweeps share a JVM and
 inherit ordering/host noise), (b) map to a FLOORS adjudication entry
 (pinned plan shape, validated by PlanSpec on every tree), or (c) sit
@@ -54,8 +60,22 @@ for p in sys.argv[3:]:
     for b in d.get("batches", {}).values():  # ABPAIRS_r12's nested shape
         harvest(b.get("queries", {}))
 
-comp = sorted(k for k in set(bench) & set(base)
-              if not is_excluded(k) and bench[k] > 0 and base[k] > 0)
+keys = sorted(set(bench) & set(base))
+comp = [k for k in keys if not is_excluded(k) and bench[k] > 0 and base[k] > 0]
+
+raw_s = sum(bench[k] for k in keys if bench[k] > 0)
+raw_d = sum(base[k] for k in keys if base[k] > 0)
+cs, cd = sum(bench[k] for k in comp), sum(base[k] for k in comp)
+wins = [k for k in comp if bench[k] < base[k]]
+errs = [k for k in keys if bench[k] < 0 or base[k] < 0]
+print(f"queries={len(keys)} raw spark={raw_s:.1f}s duck={raw_d:.1f}s "
+      f"ratio={raw_s / raw_d:.2f}")
+print(f"comparable({len(comp)}) spark={cs:.1f}s duck={cd:.1f}s "
+      f"ratio={cs / cd:.2f}  wins={len(wins)} errors={errs}")
+for k in sorted(comp, key=lambda k: bench[k] / base[k], reverse=True)[:10]:
+    print(f"  {k}: {bench[k]:.2f} vs {base[k]:.2f} = {bench[k] / base[k]:.1f}x")
+print()
+
 bad, floor_band = [], 0
 for k in comp:
     ratio, gap = bench[k] / base[k], bench[k] - base[k]

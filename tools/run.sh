@@ -1,9 +1,9 @@
 #!/bin/bash
 # Run a graft main class directly (no sbt startup): tools/run.sh graft.Verify <args...>
-# Assumes `sbt compile` has produced target/scala-2.13/classes. Probe/demo
-# mains (ExplainAll, PlanProbe, SkewDemo, ProbeR17) live in TEST scope so
-# the published jar ships operators only — they need `sbt Test/compile`
-# first and resolve from test-classes below.
+# Assumes `sbt compile` has produced target/scala-2.13/classes. The tool
+# mains ExplainAll and SkewDemo live in TEST scope so the published jar
+# ships operators only — they need `sbt Test/compile` first and resolve
+# from test-classes below.
 MAIN=$1; shift
 ADD_OPENS=""
 for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect \
