@@ -3,8 +3,11 @@ package graft
 import org.apache.spark.sql.DataFrame
 
 /** Checkpoint-mode switch for the iterative operators (q46 chain
-  * resolution, d26/d34 connected components, p66 BPE learning, s38 MMR,
-  * q58's eager bloom materialization, st47's drained grid).
+  * resolution, p66 BPE learning, s38 MMR, q58's eager bloom
+  * materialization, st47's drained grid) and for connected components
+  * (d26/d31/d34/p67/p71), which checkpoint their edge list once and
+  * checkpoint label-propagation rounds only for a graph too big to
+  * finish on the driver.
   *
   * `localCheckpoint()` truncates lineage by materializing partitions into
   * executor BLOCK STORAGE — memory/disk local to the executor. That is
@@ -31,7 +34,7 @@ object Checkpoints {
     * `spark.cleaner.referenceTracking.cleanCheckpoints=true` is set at
     * CONTEXT CREATION (it is read once by ContextCleaner). Long
     * multi-round runs (q46 up to maxIters materializations per query,
-    * d26 label propagation, p66 BPE) otherwise accumulate unbounded
+    * distributed label propagation, p66 BPE) otherwise accumulate unbounded
     * files under the dir — set the cleaner conf in the same session
     * builder that sets this one, or point the dir at a
     * storage location with a TTL/lifecycle rule (ADVICE r9).

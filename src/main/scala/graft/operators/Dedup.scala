@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import graft.Tables
 import graft.functions.PortableHash._
 import graft.Checkpoints.Ops
@@ -157,17 +159,32 @@ object Dedup {
   /** Minimum-label connected components over an undirected edge list
     * (u, v), u ≠ v. Returns (node, cluster_id) where cluster_id is the
     * smallest node id in the component — every node that appears in at
-    * least one edge gets a row.
+    * least one edge gets a row. Both columns keep the input's id type.
     *
-    * Algorithm: min-label propagation with a pointer-jump step each
-    * round (newlab(u) = min over neighbors' labels, then chase the
-    * label's OWN label — labels are node ids, so label composition is an
-    * equi-join). Plain propagation needs O(diameter) rounds; the jump
-    * step short-circuits long chains the same way q46's pointer doubling
-    * does. Each round is two linear equi-joins + one aggregation —
-    * nothing is ever all-pairs — and `localCheckpoint` truncates lineage
-    * so the plan does not grow with iteration count (reliable
-    * `checkpoint()` at cluster scale, as for q46).
+    * The edge list is materialized once (both directions, one
+    * checkpoint). What follows depends on its size:
+    *
+    *  - Small graph (the near-dup and semantic-dup graphs at any sf this
+    *    repo runs): one job gathers the edges, and an exact union-find
+    *    finishes on the driver ([[driverComponents]]). The result is a
+    *    `LocalRelation`. The gate is Spark's own "small enough to hold on
+    *    the driver" decision: `spark.sql.autoBroadcastJoinThreshold` ÷
+    *    16 bytes per edge (10 MB ⇒ ~655k edges); a threshold ≤ 0 turns
+    *    the driver finish off. Label-propagation rounds would cost
+    *    ~20 jobs here for a graph of a few dozen edges.
+    *  - 100 TB posture (the gather overflows, or the ids are not int or
+    *    long): distributed min-label propagation from that same
+    *    checkpoint, so candidate generation is never evaluated twice.
+    *
+    * Distributed algorithm: min-label propagation with a pointer-jump
+    * step each round (newlab(u) = min over neighbors' labels, then chase
+    * the label's OWN label — labels are node ids, so label composition
+    * is an equi-join). Plain propagation needs O(diameter) rounds; the
+    * jump step short-circuits long chains the same way q46's pointer
+    * doubling does. Each round is two linear equi-joins + one
+    * aggregation — nothing is ever all-pairs — and `localCheckpoint`
+    * truncates lineage so the plan does not grow with iteration count
+    * (reliable `checkpoint()` at cluster scale, as for q46).
     *
     * Fixpoint = component minimum: labels only decrease and never go
     * below the component min μ; a fixpoint label is constant per
@@ -176,12 +193,85 @@ object Dedup {
     */
   def connectedComponents(edgesRaw: DataFrame,
       maxIters: Int = 30, hintRounds: Int = 2): DataFrame = {
-    // materialize the edge list once — it is re-joined every round, and
-    // without the checkpoint each round would re-evaluate the whole
-    // upstream candidate-generation lineage (shingle + band join)
+    // materialize the edge list once — the gather reads it, and each
+    // propagation round re-joins it; without the checkpoint either would
+    // re-evaluate the whole upstream candidate-generation lineage
+    // (shingle + band join)
     val edges = edgesRaw.select(col("u"), col("v"))
       .unionByName(edgesRaw.select(col("v").as("u"), col("u").as("v")))
       .graftCheckpoint()
+    driverComponents(edges).getOrElse(propagate(edges, maxIters, hintRounds))
+  }
+
+  /** Bytes one gathered edge costs the driver (two longs) — the divisor
+    * that turns the broadcast threshold into an edge cap. */
+  private val EdgeBytes = 16L
+
+  /** The driver finish of [[connectedComponents]]: `None` when the graph
+    * is over the cap, its ids are not int or long, or an id is null.
+    *
+    * One job over the checkpointed edges: each task keeps the rows with
+    * u ≤ v (the checkpoint holds both directions) and returns them, or
+    * null once it holds more than its share `cap / partitions` — so the
+    * driver never receives more than `cap` edges, whatever the skew. A
+    * skewed graph under the cap can overflow one share and go
+    * distributed; that costs time, never correctness.
+    *
+    * Union-find links the larger root under the smaller, so every root
+    * is its set's minimum — the same label the propagation converges to.
+    */
+  private def driverComponents(edges: DataFrame): Option[DataFrame] = {
+    val spark = edges.sparkSession
+    val cap = spark.sessionState.conf.autoBroadcastJoinThreshold / EdgeBytes
+    val id = edges.schema("u")
+    if (cap <= 0 || !Seq(IntegerType, LongType).contains(id.dataType)) return None
+    val rows = edges.select(col("u").cast(LongType), col("v").cast(LongType))
+      .queryExecution.toRdd
+    val share = cap / math.max(rows.getNumPartitions, 1)
+    val parts = spark.sparkContext.runJob(rows, (it: Iterator[InternalRow]) => {
+      val buf = new scala.collection.mutable.ArrayBuilder.ofLong
+      var n = 0L
+      var fits = true
+      while (fits && it.hasNext) {
+        val r = it.next()
+        if (r.isNullAt(0) || r.isNullAt(1)) fits = false
+        else if (r.getLong(0) <= r.getLong(1)) {
+          n += 1
+          if (n > share) fits = false
+          else { buf += r.getLong(0); buf += r.getLong(1) }
+        }
+      }
+      if (fits) buf.result() else null
+    })
+    if (parts.contains(null)) return None
+    val parent = new scala.collection.mutable.LongMap[Long]()
+    def find(x: Long): Long = {
+      var root = x
+      var up = parent.getOrElseUpdate(root, root)
+      while (up != root) { root = up; up = parent(root) }
+      var c = x
+      while (c != root) { val next = parent(c); parent(c) = root; c = next }
+      root
+    }
+    parts.foreach { p =>
+      var i = 0
+      while (i < p.length) {
+        val a = find(p(i)); val b = find(p(i + 1))
+        if (a < b) parent(b) = a else if (b < a) parent(a) = b
+        i += 2
+      }
+    }
+    val typed: Long => Any = if (id.dataType == IntegerType) _.toInt else identity
+    val out = parent.keysIterator.toArray.map(n => Row(typed(n), typed(find(n))))
+    Some(spark.createDataFrame(java.util.Arrays.asList(out: _*), StructType(Seq(
+      StructField("node", id.dataType, id.nullable),
+      StructField("cluster_id", id.dataType, id.nullable)))))
+  }
+
+  /** The distributed rounds of [[connectedComponents]] over its
+    * checkpointed two-direction edge list. */
+  private def propagate(edges: DataFrame,
+      maxIters: Int, hintRounds: Int): DataFrame = {
     // init lab(u) = min(u, neighbors): the first propagation round folded
     // into the aggregation that materializes the node set
     var lab = edges.groupBy("u").agg(min(col("v")).as("mn"))
@@ -1133,8 +1223,9 @@ object Dedup {
     * the election aggregates the member grain with map-side combine.
     */
   /** d34's candidate-pair stage, exposed so PlanSpec can pin the cid
-    * equi-join directly: [[connectedComponents]]' localCheckpoint
-    * truncates lineage, so the final d34 plan cannot show this join. */
+    * equi-join directly: [[connectedComponents]] returns a
+    * `LocalRelation` or a checkpoint, so the final d34 plan cannot show
+    * this join. */
   private[graft] def d34Pairs(spark: SparkSession, dir: String): DataFrame = {
     val asg = Similarity.kmeansAssign(spark, dir)
       .select(col("vec_id"), col("cid"), col("dist"))

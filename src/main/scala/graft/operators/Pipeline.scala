@@ -773,8 +773,9 @@ object Pipeline {
     * 100 TB posture: the exact stage is one linear hash aggregation on
     * the content hash; the restriction joins shuffle the PAIR list
     * (≪ corpus — band selectivity bounds it), never corpus²; components
-    * run on the near-dup subgraph only (log-ish rounds of linear
-    * equi-joins, lineage-truncated); the audit is one map-side-combined
+    * run on the near-dup subgraph only (finished on the driver under the
+    * broadcast threshold, else log-ish rounds of linear equi-joins,
+    * lineage-truncated); the audit is one map-side-combined
     * aggregation on source. No stage re-scans text after the first
     * projection — docs ride as (doc_id, source, hash) triples.
     */

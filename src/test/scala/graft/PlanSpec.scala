@@ -827,8 +827,9 @@ class PlanSpec extends AnyFunSuite {
 
   test("d34 semdedup: candidate generation is a cid equi-join, model broadcast") {
     // pin the PAIR stage, not the final frame: connectedComponents'
-    // localCheckpoint truncates lineage, so the cid join is invisible in
-    // the final executed plan by construction
+    // lineage ends at a LocalRelation (the driver finish of a small
+    // graph) or at a checkpoint (the distributed rounds), so the cid join
+    // is invisible in the final executed plan by construction
     val pairs = operators.Dedup.d34Pairs(spark, dir)
     val p = planString(pairs)
     // the k-means model rides the same 1-row packed broadcast as s30 —

@@ -387,35 +387,72 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("connected components match in-memory union-find on random graphs") {
-    // Random sparse graphs: long paths (worst case for plain min-label
-    // propagation — exercises the pointer-jump acceleration), cliques,
-    // isolated edges, multi-component mixes.
+    // Every graph runs through both paths: the driver finish (the default
+    // at these sizes) and the distributed rounds (the finish turned off by
+    // a broadcast threshold ≤ 0). Random sparse graphs: long paths (worst
+    // case for plain min-label propagation — exercises the pointer-jump
+    // acceleration), cliques, isolated edges, multi-component mixes. Then
+    // the degenerate shapes: no edge, one edge, a hub, a long path, and
+    // IntegerType ids.
     import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.DataFrame
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
     val rnd = new scala.util.Random(23)
-    (1 to 4).foreach { trial =>
+    val random = (1 to 4).map { trial =>
       val n = 60 + trial * 25
       // path backbone chunks + random chords ⇒ components with both long
       // diameters and shortcuts
-      val edges = ((0L until n.toLong).sliding(2).collect {
+      s"random $trial" -> ((0L until n.toLong).sliding(2).collect {
         case Seq(a, b) if rnd.nextInt(4) != 0 => (a, b) // break ~1/4 of links
       }.toSeq ++ (1 to n / 4).map { _ =>
         val a = rnd.nextInt(n).toLong; val b = rnd.nextInt(n).toLong; (a, b)
       }).filter(e => e._1 != e._2)
         .map(e => (math.min(e._1, e._2), math.max(e._1, e._2))).distinct
-      // driver-side union-find reference
-      val parent = scala.collection.mutable.Map((0L until n.toLong).map(i => i -> i): _*)
-      def find(x: Long): Long = { var c = x; while (parent(c) != c) c = parent(c); c }
+    }
+    // 90 spokes on hub 50 plus 10 edges among the leaves; the path's
+    // minimum sits at its far end, 40 hops > 2^hintRounds from node 40
+    val hub = (1L to 90L).map(i => (50L, 100L + i)) ++
+      (1L to 10L).map(i => (100L + i, 200L + i))
+    val path = (0L until 40L).map(i => (i + 1, i))
+    val degenerate = Seq("empty" -> Seq.empty[(Long, Long)],
+      "single edge" -> Seq((7L, 3L)), "hub" -> hub, "path" -> path)
+    // driver-side union-find reference
+    def reference(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+      val parent = scala.collection.mutable.Map.empty[Long, Long]
+      def find(x: Long): Long = {
+        var c = parent.getOrElseUpdate(x, x); while (parent(c) != c) c = parent(c); c
+      }
       edges.foreach { case (a, b) =>
         val ra = find(a); val rb = find(b)
         if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
       }
-      val inGraph = edges.flatMap(e => Seq(e._1, e._2)).toSet
-      val want = inGraph.map(v => v -> find(v)).toMap
-      val got = graft.operators.Dedup.connectedComponents(
-          edges.toDF("u", "v"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got === want, s"trial $trial mismatch")
+      parent.keys.map(v => v -> find(v)).toMap
     }
+    def check(name: String, edges: DataFrame, want: Map[Long, Long]): Unit = {
+      def labels(df: DataFrame) =
+        df.collect().map(r => r.getAs[Number](0).longValue -> r.getAs[Number](1).longValue).toMap
+      val finished = graft.operators.Dedup.connectedComponents(edges)
+      val was = spark.conf.getOption(threshold)
+      spark.conf.set(threshold, "-1")
+      val rounds = try graft.operators.Dedup.connectedComponents(edges)
+        finally was.fold(spark.conf.unset(threshold))(spark.conf.set(threshold, _))
+      assert(finished.queryExecution.logical.isInstanceOf[LocalRelation],
+        s"$name: the driver finish did not run")
+      assert(!rounds.queryExecution.logical.isInstanceOf[LocalRelation],
+        s"$name: the distributed rounds did not run")
+      val idType = edges.schema("u").dataType
+      assert(finished.schema.map(_.dataType) === Seq(idType, idType), s"$name: schema")
+      assert(finished.schema === rounds.schema, s"$name: the paths' schemas differ")
+      assert(labels(finished) === want, s"$name: driver finish mismatch")
+      assert(labels(rounds) === want, s"$name: distributed rounds mismatch")
+    }
+    (random ++ degenerate).foreach { case (name, edges) =>
+      check(name, edges.toDF("u", "v"), reference(edges))
+    }
+    val ints = random.head._2
+    check("IntegerType ids", ints.map(e => (e._1.toInt, e._2.toInt)).toDF("u", "v"),
+      reference(ints))
   }
 
   test("q53 Aalen-Johansen matches in-memory reference; S + ΣCIF = 1; monotone") {

@@ -13,29 +13,42 @@ class QueriesSpec extends AnyFunSuite {
 
   val dir = "/root/testdata/sf0.001"
 
-  test("Tables schema memo: a repeat load runs no job; a rewrite or the nanos conf re-infers") {
-    import org.apache.parquet.example.data.simple.SimpleGroupFactory
-    import org.apache.parquet.hadoop.example.ExampleParquetWriter
-    import org.apache.parquet.schema.MessageTypeParser
-    import org.apache.spark.sql.types.LongType
+  /** Runs `f` and counts the Spark jobs it starts. The listener bus is
+    * drained before the count starts and before it is read, so no event
+    * of earlier work is counted and none of `f`'s is missed. */
+  def jobsOf[T](f: => T): (T, Int) = {
     val sc = spark.sparkContext
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val counter = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
     }
-    def jobsOf[T](f: => T): (T, Int) = {
-      org.apache.spark.TestBus.drain(sc)
-      jobs.set(0)
+    org.apache.spark.TestBus.drain(sc)
+    sc.addSparkListener(counter)
+    try {
       val r = f
       org.apache.spark.TestBus.drain(sc)
       (r, jobs.get)
-    }
-    val d = java.nio.file.Files.createTempDirectory("tables-memo").toString
+    } finally sc.removeSparkListener(counter)
+  }
+
+  /** Runs `f` on a fresh temp directory and deletes it, recursively,
+    * afterwards — also when `f` throws. */
+  def withTempDir[T](prefix: String)(f: String => T): T = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    try f(d.toString)
+    finally org.apache.commons.io.FileUtils.deleteDirectory(d)
+  }
+
+  test("Tables schema memo: a repeat load runs no job; a rewrite or the nanos conf re-infers") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    import org.apache.spark.sql.types.LongType
+    val sc = spark.sparkContext
     val nanos = "spark.sql.legacy.parquet.nanosAsLong"
     val nanosWas = spark.conf.get(nanos)
-    sc.addSparkListener(counter)
-    try {
+    withTempDir("tables-memo") { d => try {
       spark.range(3).selectExpr("id AS a").write.parquet(s"$d/t.parquet")
       val (s1, n1) = jobsOf(Tables.load(spark, d, "t").schema)
       assert(n1 > 0, "the first load infers the schema with a job")
@@ -61,11 +74,26 @@ class QueriesSpec extends AnyFunSuite {
       assert(Tables.load(spark, d, "n").schema("ts").dataType == LongType)
       spark.conf.set(nanos, "false")
       intercept[org.apache.spark.sql.AnalysisException](Tables.load(spark, d, "n"))
-    } finally {
-      spark.conf.set(nanos, nanosWas)
-      sc.removeSparkListener(counter)
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d))
-    }
+    } finally spark.conf.set(nanos, nanosWas) }
+  }
+
+  test("connected components finish a small graph in two jobs: the checkpoint and the gather") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val edges = Seq.fill(300)((rnd.nextInt(400).toLong, rnd.nextInt(400).toLong))
+      .filter(e => e._1 != e._2).toDF("u", "v")
+    def labels(rs: Array[org.apache.spark.sql.Row]) =
+      rs.map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (finished, n) = jobsOf(graft.operators.Dedup.connectedComponents(edges).collect())
+    assert(n <= 2, s"a few-hundred-edge graph ran $n jobs")
+    // the distributed rounds, with the driver finish off, agree
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    val was = spark.conf.getOption(threshold)
+    spark.conf.set(threshold, "-1")
+    val (rounds, m) = try jobsOf(graft.operators.Dedup.connectedComponents(edges).collect())
+      finally was.fold(spark.conf.unset(threshold))(spark.conf.set(threshold, _))
+    assert(m > n, s"the distributed rounds ran $m jobs, the driver finish $n")
+    assert(labels(rounds) === labels(finished))
   }
 
   test("entry returns rows") {
@@ -282,11 +310,12 @@ class QueriesSpec extends AnyFunSuite {
       (10L, "nu xi omicron pi"),            // batch: same text, loses to 5
       (20L, "unique words entirely here"))  // batch: admitted
       .map { case (id, t) => (id, t, "en", "srcX", t.length.toLong) }
-    val tmp = java.nio.file.Files.createTempDirectory("d27spec").toString
-    rows.toDF("doc_id", "text", "lang", "source", "n_chars")
-      .coalesce(1).write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val got = graft.operators.Dedup.d27IncrementalDedup(spark, tmp)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    val got = withTempDir("d27spec") { tmp =>
+      rows.toDF("doc_id", "text", "lang", "source", "n_chars")
+        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+      graft.operators.Dedup.d27IncrementalDedup(spark, tmp)
+        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    }
     assert(got(0L) === "exact_corpus")
     assert(got(5L) === "admitted")
     assert(got(10L) === "exact_batch")
@@ -529,34 +558,34 @@ class QueriesSpec extends AnyFunSuite {
     // layout below makes the marker enter the accumulator FIRST
     // (events A, START, A), which under the pre-r12 entry-creation flag
     // dropped the real edge's gap; keying on the gap bit preserves it.
-    val tmp = java.nio.file.Files.createTempDirectory("graft_st42").toString
-    val stage = java.nio.file.Files.createTempDirectory("graft_st42_stage").toString
-    val rows = Seq(
-      (1L, 1L, "A",     0L),
-      (1L, 2L, "START", 10000000L),   // +10 s
-      (1L, 3L, "A",     35000000L),   // +25 s → real START→A, gapped
-      (1L, 4L, "Z",     66000000L))   // +31 s
-    import spark.implicits._
-    rows.toDF("user_id", "event_id", "event_type", "us")
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        timestamp_micros(col("us")).as("ts"))
-      .coalesce(1).write.mode("overwrite").parquet(stage)
-    val part = new java.io.File(stage).listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    java.nio.file.Files.move(part.toPath,
-      java.nio.file.Paths.get(tmp, "events.parquet"))
-    val q = graft.operators.EventLog.q62Transitions(spark, tmp).collect()
-    val s = graft.streaming.Streams.st42StreamTransitions(spark, tmp).collect()
-    def rep(rs: Array[org.apache.spark.sql.Row]) =
-      rs.filter(_.getString(1) != "END")   // trailing END withheld by contract
-        .map(r => (r.getString(0), r.getString(1)) ->
-          (r.getLong(2), r.getLong(3), if (r.isNullAt(5)) -1L else r.getLong(5)))
-        .toMap
-    assert(rep(s) === rep(q))
-    // the collision row: marker (null gap) + one real 25 s edge → n=2,
-    // mean = 25 s DIV 2 = 12 s. A dropped or zero-padded gap sum reads
-    // null or 0 here.
-    assert(rep(q)(("START", "A")) === ((2L, 1L, 12L)))
+    withTempDir("graft_st42") { tmp => withTempDir("graft_st42_stage") { stage =>
+      val rows = Seq(
+        (1L, 1L, "A",     0L),
+        (1L, 2L, "START", 10000000L),   // +10 s
+        (1L, 3L, "A",     35000000L),   // +25 s → real START→A, gapped
+        (1L, 4L, "Z",     66000000L))   // +31 s
+      import spark.implicits._
+      rows.toDF("user_id", "event_id", "event_type", "us")
+        .select(col("user_id"), col("event_id"), col("event_type"),
+          timestamp_micros(col("us")).as("ts"))
+        .coalesce(1).write.mode("overwrite").parquet(stage)
+      val part = new java.io.File(stage).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      java.nio.file.Files.move(part.toPath,
+        java.nio.file.Paths.get(tmp, "events.parquet"))
+      val q = graft.operators.EventLog.q62Transitions(spark, tmp).collect()
+      val s = graft.streaming.Streams.st42StreamTransitions(spark, tmp).collect()
+      def rep(rs: Array[org.apache.spark.sql.Row]) =
+        rs.filter(_.getString(1) != "END")   // trailing END withheld by contract
+          .map(r => (r.getString(0), r.getString(1)) ->
+            (r.getLong(2), r.getLong(3), if (r.isNullAt(5)) -1L else r.getLong(5)))
+          .toMap
+      assert(rep(s) === rep(q))
+      // the collision row: marker (null gap) + one real 25 s edge → n=2,
+      // mean = 25 s DIV 2 = 12 s. A dropped or zero-padded gap sum reads
+      // null or 0 here.
+      assert(rep(q)(("START", "A")) === ((2L, 1L, 12L)))
+    } }
   }
 
   test("t32 screens every training doc once; overlap bounded; planted dup flagged") {

@@ -17,7 +17,8 @@ table's common shape describes, not per-row findings).
 
 Flags floor entries whose sweep ratio drifted >0.3x from the recorded
 pair (the end-of-round re-pair trigger) and floor entries whose current
-evidence clears the bar (retire them).
+evidence clears the bar (retire them): a supplied pair record, or the
+entry's own recorded `sf10_pair`.
 
 Pin validation is PlanSpec's job, not this gate's: the sf0.001 `pins`
 block (require/forbid/count caps on the AQE-executed plan) and the
@@ -112,9 +113,14 @@ for k in comp:
         bad.append(k)
         print(f"  UNADJUDICATED {k}: {bench[k]:.2f} vs {base[k]:.2f} = "
               f"{ratio:.2f}x (gap {gap:.2f} s)")
-for k in floors:
+# retire-eligible: a supplied pair record clears the bar, or the entry's
+# own recorded sf10 pair does (the scale at which the family converges)
+for k, f in floors.items():
+    sf10 = f.get("sf10_pair", {}).get("ratio")
     if k in pairs and pairs[k] <= bar:
         print(f"  retire {k}: current pair {pairs[k]:.2f}x <= {bar}x")
+    elif sf10 is not None and sf10 <= bar:
+        print(f"  retire {k}: recorded sf10 pair {sf10:.2f}x <= {bar}x")
 print(f"{len([k for k in comp if bench[k] / base[k] > bar])} sweep rows over "
       f"{bar}x: {floor_band} in the sub-{MIN_GAP_S}s-gap floor band, "
       f"{len(bad)} unadjudicated")
