@@ -23,27 +23,13 @@ object Bench {
     // keeps the sweep's steady state honest at ~100 ms/query of
     // untimed cost.
     def sweep(): Unit = { System.gc(); Thread.sleep(50) }
-    // HEADLINE PROTOCOL (r10+): noop sink — FULL evaluation of every
-    // output column. count() lets Catalyst prune operators that cannot
-    // change the row count (windows, projections — t36's model-window
-    // chain vanished entirely; the r9 measurement-truth note in
-    // BASELINE.md), while the DuckDB baseline always computes the full
-    // SELECT, so count-mode numbers flattered window/projection-tailed
-    // plans. SPARK_GRAFT_BENCH_MODE=count restores the r1–r9 protocol
-    // when a comparison against those historical records is needed.
-    // Fail fast on unknown modes (ADVICE r10): a typo'd value must not
-    // silently select a protocol — historical comparisons under a
-    // mis-spelled 'count' would be incomparable without warning, the
-    // same hazard SPARK_GRAFT_ONLY already guards against.
-    val evalFully = sys.env.get("SPARK_GRAFT_BENCH_MODE") match {
-      case None | Some("noop") => true
-      case Some("count")       => false
-      case Some(other) => sys.error(
-        s"SPARK_GRAFT_BENCH_MODE='$other' is not a protocol; use unset/'noop' (full evaluation) or 'count' (r1-r9 historical)")
-    }
+    // noop sink: FULL evaluation of every output column. count() lets
+    // Catalyst prune operators that cannot change the row count
+    // (windows, projections — t36's model-window chain vanished
+    // entirely; the r9 measurement-truth note in BASELINE.md), while the
+    // DuckDB baseline always computes the full SELECT.
     def run(df: org.apache.spark.sql.DataFrame): Unit =
-      if (evalFully) df.write.format("noop").mode("overwrite").save()
-      else { df.count(); () }
+      df.write.format("noop").mode("overwrite").save()
     // warmup pass: JIT + codegen caches + file listing, so measured times
     // reflect steady-state execution rather than first-query JVM warmup.
     // Uses the SAME evaluation shape as the timed passes so the warmed

@@ -10,8 +10,8 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * managed-cluster user builds the session from configuration, where the
   * idiomatic hook is
   * `--conf spark.sql.extensions=graft.GraftExtensions`: every graft SQL
-  * function (the codegen'd kernel family plus the capped-collect
-  * aggregate) is injected at session build time, before any user code
+  * function (the codegen'd kernel table plus the two aggregates) is
+  * injected at session build time, before any user code
   * runs — no `GraftFunctions.register` call, no temp-function scope.
   * Without it, a caller-built session gets the functions on its first
   * [[graft.Tables.load]], which registers them as temp functions; both
@@ -21,9 +21,9 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
     graft.functions.GraftFunctions.builders.foreach { case (name, b) =>
-      // DESCRIBE FUNCTION metadata: point at the builder registry, where
-      // a reader finds the name -> expression-class mapping (the builder
-      // lambda hides the concrete class until invoked)
+      // DESCRIBE FUNCTION metadata: point at the function table, where a
+      // reader finds each name's kernel row (the builder lambda hides
+      // the expression until invoked)
       ext.injectFunction((FunctionIdentifier(name),
         new ExpressionInfo("graft.functions.GraftFunctions", name), b))
     }

@@ -3,31 +3,29 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Single-pass minhash/simhash signature expressions.
+/** Static kernels of graft's text SQL functions (minhash/simhash
+  * signatures, shingles, token statistics, scrubbing).
   *
   * The declarative formulations explode tokens (×48 bit positions for
   * simhash) and re-aggregate — two shuffles over millions of
-  * intermediate rows. These expressions compute the whole signature in
+  * intermediate rows. These kernels compute the whole signature in
   * one pass over the token array, per document, with zero shuffle.
   *
   * Hash parity: identical to the SQL-level portable hash
   * (conv(substr(md5(s),1,15),16,10) ≡ DuckDB ('0x'||substr(md5(s),1,15))
   * ::BIGINT) — MD5 over UTF-8 bytes, first 15 hex chars as a 60-bit
   * int64 — so the DuckDB oracle reproduces the signatures exactly.
-  * CodegenFallback is fine here: evaluation is per-document (corpus
-  * cardinality), not per-token-row.
+  * Each `graft_*` function is one row of [[GraftFunctions.kernels]]:
+  * generated code calls the static forwarder
+  * `graft.functions.TextHash.<method>(...)` and interpreted evaluation
+  * calls the same method, so every kernel is written once.
   */
 object TextHash {
   private val md5Local = ThreadLocal.withInitial[MessageDigest](() =>
     MessageDigest.getInstance("MD5"))
-
-  private val hexDigits = "0123456789abcdef".toCharArray
 
   /** Per-thread memo for [[phCached]]: token domains are Zipfian, so
     * the same few thousand strings are hashed millions of times — the
@@ -142,9 +140,7 @@ object TextHash {
     sig
   }
 
-  // ---- ArrayData-returning entry points used by generated code ----
-  // (static forwarders on class TextHash, so codegen'd Java calls
-  // graft.functions.TextHash.<name>(...) directly)
+  // ---- ArrayData-returning entry points of the SQL functions ----
 
   def minhashSigData(tokens: ArrayData): ArrayData =
     new GenericArrayData(minhashSig(tokens))
@@ -162,7 +158,10 @@ object TextHash {
       words.getUTF8String(i + 1), Space, words.getUTF8String(i + 2))
 
   /** Distinct 3-gram word shingles, space-joined — one pass, byte-level
-    * concat (no String decode/encode per shingle). */
+    * concat (no String decode/encode per shingle). Replaces the
+    * interpreted `array_distinct(transform(sequence(...), i ->
+    * concat_ws(' ', slice(...))))` chain, which each self-join side
+    * evaluated again. */
   def shingles3Data(words: ArrayData): ArrayData = {
     val n = words.numElements()
     val seen = new java.util.HashSet[UTF8String]()
@@ -298,14 +297,6 @@ object TextHash {
     new GenericArrayData(out)
   }
 
-  /** t35's per-document token pre-aggregate: (w, c) structs, one per
-    * DISTINCT word, first-occurrence order — the unigram analog of
-    * [[bigramCountsData]] (same clone discipline: emitted words are
-    * copied off the scan-owned input buffer). Replaces the explode +
-    * (doc_id, token) hash aggregation: tf completes per document, so
-    * NO occurrence-grain rows or corpus-grain exchange exist in the
-    * plan at all — at 100 TB the old shape shuffled every token
-    * occurrence once. */
   /** t30's whitespace token count WITHOUT the array: `size(split(text,
     * ' '))` materializes every token's UTF8String just to count them.
     * The count is segments-between-single-spaces = #spaces + 1 (Spark's
@@ -349,6 +340,14 @@ object TextHash {
     new GenericArrayData(out.toArray[Any])
   }
 
+  /** t35's per-document token pre-aggregate: (w, c) structs, one per
+    * DISTINCT word, first-occurrence order — the unigram analog of
+    * [[bigramCountsData]] (same clone discipline: emitted words are
+    * copied off the scan-owned input buffer). Replaces the explode +
+    * (doc_id, token) hash aggregation: tf completes per document, so
+    * NO occurrence-grain rows or corpus-grain exchange exist in the
+    * plan at all — at 100 TB the old shape shuffled every token
+    * occurrence once. */
   def tokenCountsData(words: ArrayData): ArrayData = {
     val n = words.numElements()
     if (n == 0) return new GenericArrayData(Array.empty[Any])
@@ -550,7 +549,9 @@ object TextHash {
     * ≥4-symbol runs), without K broadcast joins or the corpus-grain
     * regexp_replace. merges rows are (rnk, pair, m) sorted ascending
     * by rnk by the caller; an empty merge table passes the
-    * symbolization through unchanged (the left-join-NULL contract). */
+    * symbolization through unchanged (the left-join-NULL contract). The
+    * merges ride a broadcast 1-row cross join (K ≤ a few entries, read
+    * per row, no memo needed). */
   def bpeApplyData(text: UTF8String, merges: ArrayData): UTF8String = {
     var sym = bpeSpacedSym(text.toString, sentinel = true)
     val k = merges.numElements()
@@ -727,8 +728,8 @@ object TextHash {
     * over the token array: token w adds ±1 (sign from hash bit) to
     * component ph(w) mod D. Signed hashing keeps inner products unbiased
     * (Weinberger et al., ICML'09 §3). Components are exact small
-    * integers carried as doubles (every value ≪ 2⁵³), so [[graft.functions.DotProduct]]
-    * and the oracle's exact-BIGINT relational dot agree bit-for-bit
+    * integers carried as doubles (every value ≪ 2⁵³), so `graft_dot`
+    * ([[VectorKernels.dot]]) and the oracle's exact-BIGINT relational dot agree bit-for-bit
     * regardless of summation order. */
   def hashVecData(words: ArrayData): ArrayData = {
     val d = PortableHash.HashVecDim
@@ -746,7 +747,10 @@ object TextHash {
     new GenericArrayData(out)
   }
 
-  /** One pass over the token array → the five profile counts. */
+  /** t28's five stop-profile scores (en, de, es, fr, zh: the count of
+    * words in each profile) in one pass over the token array — replaces
+    * five interpreted `size(filter(words, w -> w in (...)))` chains
+    * (3.4 s at sf1 on t38's eval). */
   def stopScoresData(words: ArrayData): ArrayData = {
     val n = words.numElements()
     val counts = new Array[Long](stopSets.length)
@@ -921,527 +925,4 @@ object TextHash {
     phoneScan(b2, s3)
     InternalRow(nEmail, nSsn, nPhone, UTF8String.fromBytes(s3.bytes))
   }
-}
-
-/** Shared doGenCode shape for the text-hash expressions: the generated
-  * code is a single static call into [[TextHash]] (class-level static
-  * forwarders), so these expressions participate in whole-stage codegen —
-  * no interpreted-eval bridge per row (VERDICT r1 #7) — while the hash
-  * loop itself stays ordinary JIT-compiled JVM code.
-  */
-/** stop_scores(array<string>) → array<bigint>[5]: the five
-  * stopword-profile scores of t28's language classifier (en, de, es,
-  * fr, zh — counts of words in each profile) in ONE pass over the
-  * token array. Replaces five interpreted `size(filter(words, w -> w
-  * in (...)))` lambda chains evaluated per document — the chain
-  * measured 3.4 s at sf1 on t38's eval (the p62/argmin lesson again:
-  * interpreted HOFs dominate per-row cost once output pruning can't
-  * save them). The profile word lists are canonical HERE; the oracle
-  * mirrors them by value.
-  */
-case class StopScores(child: Expression)
-    extends UnaryExpression with TextHashCodegen {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_stop_scores expects array<string>, got ${t.sql}")
-    }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_stop_scores"
-  override def staticMethod: String = "stopScoresData"
-  override def nullSafeEval(v: Any): Any =
-    TextHash.stopScoresData(v.asInstanceOf[ArrayData])
-  override protected def withNewChildInternal(c: Expression): StopScores = copy(child = c)
-}
-
-/** hash_vec(array<string>) → array<double>[D]: s36's feature-hashed
-  * signed-tf document vector (see [[TextHash.hashVecData]]) — the
-  * declarative formulation explodes the corpus to the token grain and
-  * re-aggregates by (doc, bucket) through a shuffle; this kernel folds
-  * the whole vector in one codegen'd pass per document, zero shuffle.
-  */
-case class HashVec(child: Expression)
-    extends UnaryExpression with TextHashCodegen {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_hash_vec expects array<string>, got ${t.sql}")
-    }
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "graft_hash_vec"
-  override def staticMethod: String = "hashVecData"
-  override def nullSafeEval(v: Any): Any =
-    TextHash.hashVecData(v.asInstanceOf[ArrayData])
-  override protected def withNewChildInternal(c: Expression): HashVec = copy(child = c)
-}
-
-/** entropy_stats(string) → array<double>[6]: t40's per-document entropy
-  * statistics (see [[TextHash.entropyStatsData]]) — the declarative
-  * formulation explodes the corpus to the character grain (×|chars|
-  * rows through two shuffles); this kernel folds both frequency maps in
-  * one codegen'd pass per document, zero shuffle.
-  */
-case class EntropyStats(child: Expression)
-    extends UnaryExpression with TextHashCodegen {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_entropy_stats expects string, got ${t.sql}")
-    }
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "graft_entropy_stats"
-  override def staticMethod: String = "entropyStatsData"
-  override def nullSafeEval(v: Any): Any =
-    TextHash.entropyStatsData(v.asInstanceOf[UTF8String])
-  override protected def withNewChildInternal(c: Expression): EntropyStats = copy(child = c)
-}
-
-private[functions] trait TextHashCodegen { self: UnaryExpression =>
-  /** Fully-qualified static method on [[TextHash]] to invoke. */
-  def staticMethod: String
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextHash.$staticMethod($c);")
-}
-
-/** shingles3(array<string>) → array<string>: distinct 3-gram word
-  * shingles, space-joined — one pass with a reused StringBuilder,
-  * replacing the interpreted
-  * array_distinct(transform(sequence(...), i -> concat_ws(' ', slice(...))))
-  * lambda chain that dominated the shingle-based operators' runtime
-  * (and is re-evaluated once per self-join side).
-  */
-case class Shingles3(child: Expression)
-    extends UnaryExpression with TextHashCodegen {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_shingles3"
-  override def staticMethod: String = "shingles3Data"
-  override def nullSafeEval(v: Any): Any =
-    TextHash.shingles3Data(v.asInstanceOf[ArrayData])
-  override protected def withNewChildInternal(c: Expression): Shingles3 = copy(child = c)
-}
-
-/** shingle_hashes3(array<string>) → array<bigint>: portable hashes of the
-  * distinct 3-gram shingles (d24's join keys), computed without ever
-  * materializing shingle strings into the plan.
-  */
-case class ShingleHashes3(child: Expression)
-    extends UnaryExpression with TextHashCodegen {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_shingle_hashes3"
-  override def staticMethod: String = "shingleHashes3Data"
-  override def nullSafeEval(v: Any): Any =
-    TextHash.shingleHashes3Data(v.asInstanceOf[ArrayData])
-  override protected def withNewChildInternal(c: Expression): ShingleHashes3 = copy(child = c)
-}
-
-/** feat_hashes(array<string>) → array<bigint>: p69's hashed DSIR
-  * feature buckets (unigrams then bigrams, occurrences preserved) —
-  * see [[TextHash.featHashesData]].
-  */
-case class FeatHashes(child: Expression)
-    extends UnaryExpression with TextHashCodegen {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_feat_hashes"
-  override def staticMethod: String = "featHashesData"
-  override def nullSafeEval(v: Any): Any =
-    TextHash.featHashesData(v.asInstanceOf[ArrayData])
-  override protected def withNewChildInternal(c: Expression): FeatHashes = copy(child = c)
-}
-
-/** bigram_counts(array<string>) → array<struct<w1,w2,n>>: per-document
-  * distinct-bigram counts — see [[TextHash.bigramCountsData]].
-  */
-case class BigramCounts(child: Expression)
-    extends UnaryExpression with TextHashCodegen {
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("w1", StringType, nullable = false),
-    StructField("w2", StringType, nullable = false),
-    StructField("n", LongType, nullable = false))), containsNull = false)
-  override def prettyName: String = "graft_bigram_counts"
-  override def staticMethod: String = "bigramCountsData"
-  override def nullSafeEval(v: Any): Any =
-    TextHash.bigramCountsData(v.asInstanceOf[ArrayData])
-  override protected def withNewChildInternal(c: Expression): BigramCounts = copy(child = c)
-}
-
-/** tf_in(array<string>, array<string>) → array<struct<token,tf>>:
-  * per-document term frequencies restricted to the given term set —
-  * see [[TextHash.tfInData]]. The terms side is expected to ride a
-  * broadcast 1-row cross join (per-partition set reuse is then
-  * validated by byte comparison); any other shape stays correct.
-  */
-case class TfIn(child: Expression, termsExpr: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def left: Expression = child
-  override def right: Expression = termsExpr
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (child.dataType, termsExpr.dataType) match {
-      // containsNull rejected on both sides: a null token would NPE in
-      // the set probe/insert
-      case (ArrayType(StringType, false), ArrayType(StringType, false)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (t1, t2) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_tf_in expects (array<string>, array<string>) without nulls, " +
-            s"got (${t1.sql}, ${t2.sql})")
-    }
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("token", StringType, nullable = false),
-    StructField("tf", LongType, nullable = false))), containsNull = false)
-  override def prettyName: String = "graft_tf_in"
-  override def nullSafeEval(words: Any, terms: Any): Any =
-    TextHash.tfInData(words.asInstanceOf[ArrayData], terms.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.TextHash.tfInData($a, $b);")
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): TfIn = copy(child = l, termsExpr = r)
-}
-
-/** lm_doc_score(array<string>, array<struct<w1,w2,s_ppm>>, bigint) →
-  * struct<n_bigrams,tot>: t36's per-document LM score sums against a
-  * broadcast bigram model — see [[TextHash.lmDocScoreData]]. The model
-  * side is expected to ride a broadcast 1-row cross join; the third
-  * argument is the model's content fingerprint, computed in the same
-  * 1-row aggregation, which keys the per-partition model-map memo
-  * (O(1) validation — see the [[TextHash]] memo note).
-  */
-case class LmDocScore(child: Expression, modelExpr: Expression, fpExpr: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-  override def first: Expression = child
-  override def second: Expression = modelExpr
-  override def third: Expression = fpExpr
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (child.dataType, modelExpr.dataType, fpExpr.dataType) match {
-      // containsNull rejected on both arrays: a null token/model row
-      // would NPE in the map probe/build. Field nullability is NOT
-      // pinned (aggregate-derived model columns surface as nullable);
-      // the model-build contract is that no field value is null.
-      case (ArrayType(StringType, false),
-            ArrayType(StructType(Array(
-              StructField(_, StringType, _, _),
-              StructField(_, StringType, _, _),
-              StructField(_, LongType, _, _))), false),
-            LongType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (t1, t2, t3) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_lm_doc_score expects (array<string>, array<struct<w1 string, " +
-            s"w2 string, s_ppm bigint>>, bigint) without nulls, got " +
-            s"(${t1.sql}, ${t2.sql}, ${t3.sql})")
-    }
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_bigrams", LongType, nullable = false),
-    StructField("tot", LongType, nullable = false)))
-  override def prettyName: String = "graft_lm_doc_score"
-  override def nullSafeEval(words: Any, model: Any, fp: Any): Any =
-    TextHash.lmDocScoreData(words.asInstanceOf[ArrayData],
-      model.asInstanceOf[ArrayData], fp.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b, c) =>
-      s"${ev.value} = graft.functions.TextHash.lmDocScoreData($a, $b, $c);")
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): LmDocScore =
-    copy(child = f, modelExpr = s, fpExpr = t)
-}
-
-/** bpe_apply(string, array<struct<rnk,pair,m>>) → string: p68's
-  * sentinel symbolization + rank-ordered merge application — see
-  * [[TextHash.bpeApplyData]]. The merges side rides a broadcast 1-row
-  * cross join (K ≤ a few entries — read per row, no memo needed).
-  */
-case class BpeApply(child: Expression, mergesExpr: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def left: Expression = child
-  override def right: Expression = mergesExpr
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (child.dataType, mergesExpr.dataType) match {
-      // containsNull rejected on the merge array; field nullability not
-      // pinned (aggregate-derived columns surface nullable) — the
-      // learn-table contract is that no field value is null
-      case (StringType,
-            ArrayType(StructType(Array(
-              StructField(_, LongType, _, _),
-              StructField(_, StringType, _, _),
-              StructField(_, StringType, _, _))), false)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (t1, t2) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_bpe_apply expects (string, array<struct<rnk bigint, pair " +
-            s"string, m string>>) without nulls, got (${t1.sql}, ${t2.sql})")
-    }
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_bpe_apply"
-  override def nullSafeEval(text: Any, merges: Any): Any =
-    TextHash.bpeApplyData(text.asInstanceOf[UTF8String], merges.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.TextHash.bpeApplyData($a, $b);")
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): BpeApply = copy(child = l, mergesExpr = r)
-}
-
-/** rep_stats(array<string>) → struct<n_words,n_distinct,top_bigram_n,
-  * n_bigrams>: t34's per-document repetition statistics — see
-  * [[TextHash.repStatsData]].
-  */
-case class RepStats(child: Expression)
-    extends UnaryExpression with TextHashCodegen {
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_words", LongType, nullable = false),
-    StructField("n_distinct", LongType, nullable = false),
-    StructField("top_bigram_n", LongType, nullable = false),
-    StructField("n_bigrams", LongType, nullable = false)))
-  override def prettyName: String = "graft_rep_stats"
-  override def staticMethod: String = "repStatsData"
-  override def nullSafeEval(v: Any): Any =
-    TextHash.repStatsData(v.asInstanceOf[ArrayData])
-  override protected def withNewChildInternal(c: Expression): RepStats = copy(child = c)
-}
-
-/** ph(string) → bigint: the 60-bit portable hash
-  * ([[graft.functions.PortableHash]] — first 15 hex chars of md5 as
-  * int64) as ONE codegen'd kernel call. The SQL formulation
-  * `conv(substr(md5(c),1,15),16,10)::long` is semantically identical
-  * but pays, per row: a fresh MessageDigest (Spark's Md5 goes through
-  * commons-codec's getInstance), a 32-char hex string, a Substring
-  * copy, and Conv's base-conversion parse — four allocations on the
-  * corpus grain at every hash site. This kernel reuses a per-thread
-  * digest and assembles the int64 straight from the digest bytes.
-  */
-case class PhHash(child: Expression)
-    extends UnaryExpression with TextHashCodegen {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_ph expects string, got ${t.sql}")
-    }
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_ph"
-  override def staticMethod: String = "phLong"
-  override def nullSafeEval(v: Any): Any =
-    TextHash.phLong(v.asInstanceOf[UTF8String])
-  override protected def withNewChildInternal(c: Expression): PhHash = copy(child = c)
-}
-
-/** hll_rho(bigint) → int: see [[TextHash.hllRho]]. */
-case class HllRho(child: Expression)
-    extends UnaryExpression with TextHashCodegen {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case LongType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_hll_rho expects bigint, got ${t.sql}")
-    }
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "graft_hll_rho"
-  override def staticMethod: String = "hllRho"
-  override def nullSafeEval(v: Any): Any =
-    TextHash.hllRho(v.asInstanceOf[Long])
-  override protected def withNewChildInternal(c: Expression): HllRho = copy(child = c)
-}
-
-/** pii_scrub(string) → struct<n_email,n_ssn,n_phone,clean>: t33's
-  * fused count-and-redact scan — see [[TextHash.piiScrubData]].
-  */
-case class PiiScrub(child: Expression)
-    extends UnaryExpression with TextHashCodegen {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_pii_scrub expects string, got ${t.sql}")
-    }
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_email", LongType, nullable = false),
-    StructField("n_ssn", LongType, nullable = false),
-    StructField("n_phone", LongType, nullable = false),
-    StructField("clean", StringType, nullable = false)))
-  override def prettyName: String = "graft_pii_scrub"
-  override def staticMethod: String = "piiScrubData"
-  override def nullSafeEval(v: Any): Any =
-    TextHash.piiScrubData(v.asInstanceOf[UTF8String])
-  override protected def withNewChildInternal(c: Expression): PiiScrub = copy(child = c)
-}
-
-/** token_counts(array<string>) → array<struct<w,c>>: t35's per-document
-  * distinct-token counts — see [[TextHash.tokenCountsData]].
-  */
-case class TokenCounts(child: Expression)
-    extends UnaryExpression with TextHashCodegen {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, false) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_token_counts expects array<string> without nulls, got ${t.sql}")
-    }
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("w", StringType, nullable = false),
-    StructField("c", LongType, nullable = false))), containsNull = false)
-  override def prettyName: String = "graft_token_counts"
-  override def staticMethod: String = "tokenCountsData"
-  override def nullSafeEval(v: Any): Any =
-    TextHash.tokenCountsData(v.asInstanceOf[ArrayData])
-  override protected def withNewChildInternal(c: Expression): TokenCounts = copy(child = c)
-}
-
-/** ws_token_count(string) → bigint: t30's whitespace token count with
-  * no token array — see [[TextHash.wsTokenCount]].
-  */
-case class WsTokenCount(child: Expression)
-    extends UnaryExpression with TextHashCodegen {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_ws_token_count"
-  override def staticMethod: String = "wsTokenCount"
-  override def nullSafeEval(v: Any): Any =
-    TextHash.wsTokenCount(v.asInstanceOf[UTF8String])
-  override protected def withNewChildInternal(c: Expression): WsTokenCount = copy(child = c)
-}
-
-/** distinct_tokens(string) → array<string>: one-pass distinct
-  * whitespace tokens — see [[TextHash.distinctTokensData]].
-  */
-case class DistinctTokens(child: Expression)
-    extends UnaryExpression with TextHashCodegen {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_distinct_tokens"
-  override def staticMethod: String = "distinctTokensData"
-  override def nullSafeEval(v: Any): Any =
-    TextHash.distinctTokensData(v.asInstanceOf[UTF8String])
-  override protected def withNewChildInternal(c: Expression): DistinctTokens = copy(child = c)
-}
-
-/** feat_counts(array<string>) → array<struct<f,c>>: p69's per-document
-  * occupied-bucket histogram — see [[TextHash.featCountsData]].
-  */
-case class FeatCounts(child: Expression)
-    extends UnaryExpression with TextHashCodegen {
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("f", LongType, nullable = false),
-    StructField("c", LongType, nullable = false))), containsNull = false)
-  override def prettyName: String = "graft_feat_counts"
-  override def staticMethod: String = "featCountsData"
-  override def nullSafeEval(v: Any): Any =
-    TextHash.featCountsData(v.asInstanceOf[ArrayData])
-  override protected def withNewChildInternal(c: Expression): FeatCounts = copy(child = c)
-}
-
-/** chunk_fps(binary) → array<bigint>: m35's per-payload chunk
-  * fingerprints (see [[TextHash.chunkFpsData]]). Input is the raw
-  * payload bytes; the hex rendering exists only inside the hash loop,
-  * never in the plan. */
-case class ChunkFps(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_chunk_fps expects binary, got ${t.sql}")
-    }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_chunk_fps"
-  override def nullSafeEval(v: Any): Any =
-    TextHash.chunkFpsData(v.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextHash.chunkFpsData($c);")
-  override protected def withNewChildInternal(c: Expression): ChunkFps = copy(child = c)
-}
-
-/** simhash48(array<string>) → bigint. */
-case class Simhash48(child: Expression)
-    extends UnaryExpression with TextHashCodegen {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_simhash48"
-  override def staticMethod: String = "simhash48"
-  override def nullSafeEval(v: Any): Any =
-    TextHash.simhash48(v.asInstanceOf[ArrayData])
-  override protected def withNewChildInternal(c: Expression): Simhash48 = copy(child = c)
-}
-
-/** minhash_sig(array<string>) → array<bigint> of 16 minhashes. */
-case class MinhashSig(child: Expression)
-    extends UnaryExpression with TextHashCodegen {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_minhash_sig"
-  override def staticMethod: String = "minhashSigData"
-  override def nullSafeEval(v: Any): Any =
-    TextHash.minhashSigData(v.asInstanceOf[ArrayData])
-  override protected def withNewChildInternal(c: Expression): MinhashSig = copy(child = c)
-}
-
-/** window_hashes(array<string>, w) → array<bigint>: portable hashes of
-  * every w-token window, stride 1 (d29's span postings). The window
-  * width must be a foldable integer literal — it parameterizes the
-  * posting family, so it is part of the plan, not of the data.
-  */
-case class WindowHashes(child: Expression, wExpr: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def left: Expression = child
-  override def right: Expression = wExpr
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (child.dataType, wExpr.dataType, wExpr.foldable) match {
-      // containsNull arrays rejected: a null token would NPE inside the
-      // byte-level concat; w validated here (on the UN-truncated long, so
-      // a width like 4294967298L fails analysis instead of silently
-      // wrapping to 2) rather than as an executor array-bounds crash
-      case (ArrayType(StringType, false), IntegerType | LongType, true)
-          if wLong >= 1L && wLong <= Int.MaxValue.toLong =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (t, wt, f) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_window_hashes expects (array<string> without nulls, foldable int in " +
-            s"[1, ${Int.MaxValue}]), got (${t.sql}, ${wt.sql}, foldable=$f)")
-    }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_window_hashes"
-
-  private lazy val wLong: Long = wExpr.eval(null) match {
-    case i: java.lang.Integer => i.longValue()
-    case l: java.lang.Long => l.longValue()
-    case _ => -1L // foldable-to-null widths rejected by checkInputDataTypes
-  }
-  private lazy val w: Int = wLong.toInt // safe: range-checked at analysis
-
-  override def nullSafeEval(v: Any, unused: Any): Any =
-    TextHash.windowHashesData(v.asInstanceOf[ArrayData], w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, _) =>
-      s"${ev.value} = graft.functions.TextHash.windowHashesData($a, $w);")
-
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): WindowHashes = copy(child = l, wExpr = r)
-}
-
-/** minhash_bands(array<string>) → array<string> of LSH band keys. */
-case class MinhashBands(child: Expression)
-    extends UnaryExpression with TextHashCodegen {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_minhash_bands"
-  override def staticMethod: String = "minhashBandsData"
-  override def nullSafeEval(v: Any): Any =
-    TextHash.minhashBandsData(v.asInstanceOf[ArrayData])
-  override protected def withNewChildInternal(c: Expression): MinhashBands = copy(child = c)
 }

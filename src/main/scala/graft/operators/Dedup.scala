@@ -894,7 +894,7 @@ object Dedup {
   /** d28: corpus-wide embedding near-dup detection blocked by IVF cells —
     * the unbounded-corpus scale path d25's label-blocked baseline defers
     * to. Every vector indexes on its home Voronoi cell (element 0 of the
-    * codegen'd [[graft.functions.IvfCells]] assignment) and probes its
+    * codegen'd [[graft.functions.VectorKernels.ivfCells]] assignment) and probes its
     * top-2 cells, so a boundary pair is found when EITHER side's probe
     * list reaches the other's home cell; candidate generation is a cell
     * equi-join, never corpus². Pairs are canonicalized (least, greatest)

@@ -180,7 +180,7 @@ object Multimodal {
     * metadata-stripped copies, truncated tails). Each payload splits
     * into [[ChunkdupNumChunks]] size-relative chunks; chunk i's int64
     * fingerprint comes from the codegen'd
-    * [[graft.functions.ChunkFps]] (ph over the chunk's uppercase-hex
+    * [[graft.functions.TextHash.chunkFpsData]] (ph over the chunk's uppercase-hex
     * rendering — both engines compute the identical value, so even a
     * 60-bit collision produces the same pair on both sides, the d24
     * posting-hash device). Two payloads sharing

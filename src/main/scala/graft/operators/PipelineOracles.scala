@@ -554,7 +554,7 @@ object PipelineOracles {
 
   /** m35 mirror: DuckDB cannot slice blobs (the m33/m34 device), so the
     * chunk fingerprint is ph over the SAME uppercase-hex slice the
-    * Spark-side [[graft.functions.ChunkFps]] hashes — identical int64
+    * Spark-side [[graft.functions.TextHash.chunkFpsData]] hashes — identical int64
     * on both engines (identical even under a 60-bit collision, the d24
     * posting-hash device); chunk geometry is exact integer arithmetic. */
   private val m35Sql: String =

@@ -18,8 +18,8 @@ import graft.Checkpoints.Ops
 object Similarity {
 
   /** Embeddings (raw float arrays) with precomputed L2 norm via the
-    * codegen'd [[graft.functions.DotProduct]] expression — float elements
-    * widen to double in the loop, exactly matching the oracle's
+    * codegen'd `graft_dot` kernel ([[graft.functions.VectorKernels.dot]]) —
+    * float elements widen to double in the loop, exactly matching the oracle's
     * `embedding::DOUBLE[]` cast, with no interpreted lambdas in the path.
     */
   private def vecs(spark: SparkSession, dir: String): DataFrame = {
@@ -57,9 +57,9 @@ object Similarity {
   /** s27: random-hyperplane LSH bucketed ANN top-k, MULTI-PROBE.
     * 8 deterministic integer hyperplanes: component j of plane p is
     * ((1315423911·p + 2654435761·j) mod 1000003) − 501001. Bucket = the
-    * 8 sign bits, computed by the codegen'd
-    * [[graft.functions.HyperplaneBucket]] expression (one primitive loop
-    * per row — replaces 8 interpreted aggregate/transform lambda chains
+    * 8 sign bits, computed by the codegen'd `graft_hyperplane_bucket`
+    * kernel ([[graft.functions.VectorKernels.hyperplaneBucket]]: one
+    * primitive loop per row — replaces 8 interpreted aggregate/transform lambda chains
     * that ran 16× over baseline; VERDICT r1 #3).
     *
     * Single-bucket probing loses any true neighbor whose vector lands a
@@ -91,7 +91,7 @@ object Similarity {
 
   /** s28: IVF-cell ANN — the other standard ANN scale architecture.
     * Where s27 buckets by hash-sign bits, IVF partitions the corpus into
-    * Voronoi cells of a centroid set (here [[graft.functions.IvfCells]]'
+    * Voronoi cells of a centroid set (here [[graft.functions.VectorKernels.ivfCells]]'
     * deterministic pseudo-centroids; a production build would k-means
     * them) and searches only the query's nprobe nearest cells. The
     * corpus indexes on its home cell (element 0); the query side
@@ -270,7 +270,7 @@ object Similarity {
 
   /** One packed-broadcast assignment pass: pts × (1-row centroid array)
     * → per-row argmin via min(d·100 + cid) over the array, computed by
-    * the codegen'd [[graft.functions.KmeansArgmin]] (the interpreted
+    * the codegen'd [[graft.functions.VectorKernels.kmeansArgmin]] (the interpreted
     * array_min/transform/zip_with chain measured ~385 µs/row at K=16 —
     * the whole operator's cost — vs a primitive loop). */
   /** K (cid, cv) rows folded into ONE row holding the sorted centroid
@@ -545,7 +545,7 @@ object Similarity {
     * reconstructs x̂ᵢ = loᵢ + round-trip(xᵢ) — exactly what a scan over
     * stored codes computes — and scoring is the asymmetric s29 shape:
     * the RAW query against reconstructed corpus vectors, via the same
-    * codegen'd [[graft.functions.KmeansArgmin]] singleton-candidate
+    * codegen'd [[graft.functions.VectorKernels.kmeansArgmin]] singleton-candidate
     * device the exact truth uses (no interpreted fold on the corpus
     * grain). All arithmetic exact BIGINT on s30's grid: code = (x−lo)
     * ·255 div max(1, hi−lo), span-0 dims round-trip to themselves.

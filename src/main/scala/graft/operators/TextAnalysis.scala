@@ -33,7 +33,7 @@ object TextAnalysis {
   private[graft] def withPredLang(df: DataFrame): DataFrame = {
     // all five profile scores in ONE codegen'd pass over the token
     // array (the five interpreted size(filter(...)) chains measured
-    // 3.4 s at sf1 on t38 — see graft.functions.StopScores)
+    // 3.4 s at sf1 on t38 — see graft.functions.TextHash.stopScoresData)
     df
     .withColumn("graft_ls", expr("graft_stop_scores(words)"))
     .withColumn("s_en", col("graft_ls").getItem(0))

@@ -43,16 +43,16 @@ class PlanSpec extends AnyFunSuite {
     allNodes(executed(df)).count(_.isInstanceOf[Exchange])
 
   /** graft kernels evaluated in the child of a global sort's range
-    * exchange. The range partitioner's sampling job runs that child once
-    * more before the map stage runs it, so a kernel there is evaluated
-    * twice; a finished query stage below the exchange is a boundary
-    * (sampling then reads its shuffle output). */
-  private def kernelsBelowRangeExchange(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    * exchange in `plan`. The range partitioner's sampling job runs that
+    * child once more before the map stage runs it, so a kernel there is
+    * evaluated twice; a finished query stage below the exchange is a
+    * boundary (sampling then reads its shuffle output). */
+  private def kernelsBelowRangeExchange(plan: SparkPlan): Seq[String] = {
     def sampled(p: SparkPlan): Seq[SparkPlan] = p match {
       case _: QueryStageExec | _: Exchange | _: ReusedExchangeExec => Nil
       case _ => p +: p.children.flatMap(sampled)
     }
-    allNodes(executed(df)).collect {
+    allNodes(plan).collect {
       case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
     }.flatMap(e => sampled(e.child)).flatMap(_.expressions)
       .flatMap(_.collect { case k if k.prettyName.startsWith("graft_") => k.prettyName })
@@ -69,9 +69,39 @@ class PlanSpec extends AnyFunSuite {
       val p = planString(df)
       assert(p.contains("rangepartitioning(doc_id"), s"$k: no global sort on doc_id:\n$p")
       assert(p.contains(kernel), s"$k: $kernel missing:\n$p")
-      val twice = kernelsBelowRangeExchange(df)
+      val twice = kernelsBelowRangeExchange(executed(df))
       assert(twice.isEmpty, s"$k: $twice in the range exchange's sampled child:\n$p")
     }
+  }
+
+  test("graft kernels below a range exchange: only the recorded keys") {
+    // every key's finished plan; a kernel in a global sort's sampled
+    // child runs twice. These nine are recorded and not yet fixed: a new
+    // key here fails, and a fixed key is deleted from the map
+    val recorded = Map(
+      "d23_simhash" -> Seq("graft_collect_capped"),
+      "d25_embed_neardup" -> Seq("graft_dot"),
+      "p56_stratified_split" -> Seq("graft_ph"),
+      "p61_chunk_overlap" -> Seq("graft_ph"),
+      "p62_balanced_sample" -> Seq("graft_kmeans_argmin", "graft_quantize_vec"),
+      "p71_leakage_safe_split" -> Seq("graft_ph"),
+      "q08_last_per_key" -> Seq("graft_last_by2"),
+      "s30_kmeans" -> Seq("graft_kmeans_argmin", "graft_quantize_vec"),
+      "t35_keywords" -> Seq("graft_token_counts"))
+    // AQE ends a finished plan's sampled region at query stages built
+    // from the initial plan's exchanges, so it only shrinks: a key whose
+    // initial plan has no such kernel is not executed
+    def initial(df: org.apache.spark.sql.DataFrame): SparkPlan =
+      df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case p => p
+      }
+    val found = SparkEntry.queries.toSeq.sortBy(_._1).map { case (k, fn) =>
+      val df = fn(spark, dir)
+      k -> (if (kernelsBelowRangeExchange(initial(df)).isEmpty) Nil
+        else kernelsBelowRangeExchange(executed(df)).sorted)
+    }.filter(_._2.nonEmpty).toMap
+    assert(found === recorded)
   }
 
   test("orderAssembly family plans hash aggregation, never SortAggregate (r16)") {

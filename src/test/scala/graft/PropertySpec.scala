@@ -1723,4 +1723,149 @@ class PropertySpec extends AnyFunSuite {
       .collect()
     rows.foreach(r => assert(r.getInt(1) === r.getInt(2), s"w=${r.getLong(0)}"))
   }
+
+  /** Inputs for every scalar graft function: null arguments (id 3),
+    * empty text and arrays (id 1), multibyte text (id 2), float and
+    * double vectors, and vectors of mismatched length (id 2) or with a
+    * null element (id 4). Built from an RDD so no optimizer rule
+    * evaluates a kernel before execution. */
+  private lazy val kernelInputs = {
+    def ints(xs: Long*) = xs.map(Long.box)
+    val vec = Seq(0.5, -1.25, 2.0, 0.125, -0.75, 1.0, 3.5, -2.0)
+    val text = Seq("the cat sat on the mat the cat sat on", "",
+      "héllo wörld 的 是 了 héllo wörld", null,
+      "mail bob@ex.org or a@b@c.com, ssn 123-45-6789, call 555-0123\nnext",
+      "a b c a b c a b c d")
+    def words(t: String): Seq[String] = if (t == null) null
+      else if (t.isEmpty) Seq.empty else t.split(" ", -1).toSeq
+    val cents = Seq(Row(1, ints(1, 2, 3)), Row(2, ints(0, 0, 0)), Row(3, ints(4, 0, 1)))
+    val rows = text.zipWithIndex.map { case (t, id) =>
+      val w = words(t)
+      def orNull[T](v: => T): Any = if (t == null) null else v
+      Row(id, t, w, orNull(w.flatMap(x => Seq(x, null))),
+        orNull(t.getBytes("UTF-8")), orNull((id.toLong << 48) - id),
+        orNull(if (id == 1) Seq.empty else vec.take(3 + id).map(_.toFloat)),
+        orNull(if (id == 1) Seq.empty else vec.take(if (id == 2) 3 + id - 1 else 3 + id)),
+        orNull(if (id == 4) Seq(1.0f, null, 2.0f) else Seq(1.5f, -0.5f)),
+        orNull(if (id == 2) ints(5, 6) else if (id == 4) Seq(Long.box(5), null, Long.box(1))
+          else ints(1, 2, 3).map(_ * id)),
+        orNull(if (id == 1) Seq.empty else ints(0, 0, 0)),
+        orNull(if (id == 1) Seq.empty else ints(9, 10, 1)),
+        orNull(if (id == 1) Seq.empty else cents.take(1 + id % 3)),
+        orNull(Seq(Row("the", "cat", 5L), Row("cat", "sat", 7L), Row("b", "c", 2L))),
+        orNull(11L),
+        orNull(Seq(Row(1L, "t h", "th"), Row(2L, "th e", "the"), Row(3L, "a t", "at"))),
+        orNull(Seq("cat", "b", "wörld")))
+    }
+    def struct(fs: (String, DataType)*) = StructType(fs.map { case (n, t) => StructField(n, t) })
+    val schema = StructType(Seq(
+      StructField("id", IntegerType, nullable = false),
+      StructField("s", StringType),
+      StructField("w", ArrayType(StringType, containsNull = false)),
+      StructField("wn", ArrayType(StringType)),
+      StructField("b", BinaryType),
+      StructField("l", LongType),
+      StructField("f", ArrayType(FloatType)),
+      StructField("d", ArrayType(DoubleType)),
+      StructField("fn", ArrayType(FloatType)),
+      StructField("q", ArrayType(LongType)),
+      StructField("lo", ArrayType(LongType)),
+      StructField("hi", ArrayType(LongType)),
+      StructField("cents", ArrayType(struct("cid" -> IntegerType, "cv" -> ArrayType(LongType)))),
+      StructField("model", ArrayType(
+        struct("w1" -> StringType, "w2" -> StringType, "s_ppm" -> LongType), containsNull = false)),
+      StructField("fp", LongType),
+      StructField("merges", ArrayType(
+        struct("rnk" -> LongType, "pair" -> StringType, "m" -> StringType), containsNull = false)),
+      StructField("terms", ArrayType(StringType, containsNull = false))))
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+  }
+
+  /** Per scalar function: calls over [[kernelInputs]] and one wrong call
+    * per rule of its type check. */
+  private val kernelCases: Map[String, (Seq[String], Seq[String])] = Map(
+    "graft_ph" -> (Seq("graft_ph(s)"), Seq("graft_ph(l)")),
+    "graft_hll_rho" -> (Seq("graft_hll_rho(l)"), Seq("graft_hll_rho(s)")),
+    "graft_simhash48" -> (Seq("graft_simhash48(w)"), Seq("graft_simhash48(s)")),
+    "graft_minhash_sig" -> (Seq("graft_minhash_sig(w)"), Seq("graft_minhash_sig(q)")),
+    "graft_minhash_bands" -> (Seq("graft_minhash_bands(w)"), Seq("graft_minhash_bands(s)")),
+    "graft_shingles3" -> (Seq("graft_shingles3(w)"), Seq("graft_shingles3(l)")),
+    "graft_shingle_hashes3" -> (Seq("graft_shingle_hashes3(w)"), Seq("graft_shingle_hashes3(d)")),
+    "graft_window_hashes" -> (Seq("graft_window_hashes(w, 2)", "graft_window_hashes(w, 4L)"),
+      Seq("graft_window_hashes(wn, 2)", "graft_window_hashes(w, id)",
+        "graft_window_hashes(s, 2)")),
+    "graft_chunk_fps" -> (Seq("graft_chunk_fps(b)"), Seq("graft_chunk_fps(s)")),
+    "graft_stop_scores" -> (Seq("graft_stop_scores(wn)", "graft_stop_scores(w)"),
+      Seq("graft_stop_scores(s)")),
+    "graft_entropy_stats" -> (Seq("graft_entropy_stats(s)"), Seq("graft_entropy_stats(w)")),
+    "graft_hash_vec" -> (Seq("graft_hash_vec(wn)"), Seq("graft_hash_vec(s)")),
+    "graft_feat_hashes" -> (Seq("graft_feat_hashes(w)"), Seq("graft_feat_hashes(q)")),
+    "graft_feat_counts" -> (Seq("graft_feat_counts(w)"), Seq("graft_feat_counts(s)")),
+    "graft_bigram_counts" -> (Seq("graft_bigram_counts(w)"), Seq("graft_bigram_counts(s)")),
+    "graft_rep_stats" -> (Seq("graft_rep_stats(w)"), Seq("graft_rep_stats(s)")),
+    "graft_token_counts" -> (Seq("graft_token_counts(w)"), Seq("graft_token_counts(wn)")),
+    "graft_ws_token_count" -> (Seq("graft_ws_token_count(s)"), Seq("graft_ws_token_count(w)")),
+    "graft_distinct_tokens" -> (Seq("graft_distinct_tokens(s)"), Seq("graft_distinct_tokens(b)")),
+    "graft_pii_scrub" -> (Seq("graft_pii_scrub(s)"), Seq("graft_pii_scrub(l)")),
+    "graft_tf_in" -> (Seq("graft_tf_in(w, terms)"), Seq("graft_tf_in(w, wn)")),
+    "graft_lm_doc_score" -> (Seq("graft_lm_doc_score(w, model, fp)"),
+      Seq("graft_lm_doc_score(w, model, s)", "graft_lm_doc_score(w, merges, fp)")),
+    "graft_bpe_apply" -> (Seq("graft_bpe_apply(s, merges)"), Seq("graft_bpe_apply(s, model)")),
+    "graft_dot" -> (Seq("graft_dot(f, f)", "graft_dot(f, d)", "graft_dot(d, d)", "graft_dot(fn, fn)"),
+      Seq("graft_dot(q, d)")),
+    "graft_hyperplane_bucket" -> (Seq("graft_hyperplane_bucket(f)", "graft_hyperplane_bucket(d)"),
+      Seq("graft_hyperplane_bucket(q)")),
+    "graft_ivf_cells" -> (Seq("graft_ivf_cells(f)", "graft_ivf_cells(d)"), Seq("graft_ivf_cells(w)")),
+    "graft_ivf_cells_n" -> (Seq("graft_ivf_cells_n(d, 5)", "graft_ivf_cells_n(f, 16L)"),
+      Seq("graft_ivf_cells_n(d, id)", "graft_ivf_cells_n(q, 5)")),
+    "graft_kmeans_argmin" -> (Seq("graft_kmeans_argmin(q, cents)"),
+      Seq("graft_kmeans_argmin(d, cents)", "graft_kmeans_argmin(q, model)")),
+    "graft_quantize_vec" -> (Seq("graft_quantize_vec(f)", "graft_quantize_vec(d)",
+      "graft_quantize_vec(fn)"), Seq("graft_quantize_vec(q)")),
+    "graft_sq_xhat" -> (Seq("graft_sq_xhat(q, lo, hi)"), Seq("graft_sq_xhat(q, lo, d)")))
+
+  private val scalarKernels = graft.functions.GraftFunctions.builders.map(_._1)
+    .filterNot(Set("graft_collect_capped", "graft_last_by2"))
+
+  test("every scalar kernel evaluates the same interpreted and under codegen") {
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    assert(scalarKernels.toSet === kernelCases.keySet)
+    val confs = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    def run(call: String, mode: Seq[String]): Seq[String] = {
+      val saved = confs.map(k => k -> spark.conf.getOption(k))
+      try {
+        confs.zip(mode).foreach { case (k, v) => spark.conf.set(k, v) }
+        val df = kernelInputs.selectExpr("id", call)
+        val rows = df.collect().sortBy(_.getInt(0)).map(_.toString).toSeq
+        val whole = df.queryExecution.executedPlan.exists(_.isInstanceOf[WholeStageCodegenExec])
+        assert(whole === (mode.head == "true"), s"$call under $mode:\n${df.queryExecution.executedPlan}")
+        rows
+      } finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    for (name <- scalarKernels; call <- kernelCases(name)._1) {
+      val interpreted = run(call, Seq("false", "NO_CODEGEN"))
+      val codegen = run(call, Seq("true", "CODEGEN_ONLY"))
+      assert(interpreted === codegen, call)
+      assert(codegen(3) === "[3,null]", s"$call on null arguments")
+      assert(codegen.count(!_.endsWith(",null]")) >= 2, s"$call: $codegen")
+    }
+    // NULL beyond null arguments: length mismatch (id 2), a null
+    // element (id 4), no centroids (id 1)
+    for ((call, ids) <- Seq("graft_dot(f, d)" -> Seq(2), "graft_dot(fn, fn)" -> Seq(4),
+        "graft_kmeans_argmin(q, cents)" -> Seq(1, 2, 4), "graft_sq_xhat(q, lo, hi)" -> Seq(1, 2, 4));
+        mode <- Seq(Seq("false", "NO_CODEGEN"), Seq("true", "CODEGEN_ONLY"))) {
+      val rows = run(call, mode)
+      assert(ids.forall(i => rows(i) == s"[$i,null]"), s"$call under $mode: $rows")
+    }
+  }
+
+  test("every scalar kernel rejects wrong argument types at analysis, naming itself") {
+    for (name <- scalarKernels; call <- kernelCases(name)._2) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](kernelInputs.selectExpr(call))
+      assert(e.getMessage.contains(s"$name expects"), s"$call: ${e.getMessage}")
+    }
+  }
 }

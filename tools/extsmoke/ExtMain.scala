@@ -10,7 +10,7 @@ import org.apache.spark.sql.SparkSession
   * run against the PUBLISHED jar (tools/extsmoke.sh keeps
   * target/scala-2.13/classes off the classpath).
   *
-  * Leg 1 resolves graft kernels via pure SQL BEFORE any graft.* operator
+  * Leg 1 resolves graft functions via pure SQL BEFORE any graft.* operator
   * code runs, so the only way the functions can exist is the extensions
   * injection itself (the first table load registers them as temp
   * functions, which would mask a broken injection if an operator ran
@@ -30,8 +30,8 @@ object ExtMain {
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
 
-    // Leg 1: kernels must already be injected — scalar, vector, and the
-    // capped-collect aggregate (three builder families).
+    // Leg 1: functions must already be injected — text and vector
+    // kernels and the capped-collect aggregate.
     val dot = spark.sql("SELECT graft_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d")
       .collect()(0).getDouble(0)
     require(dot == 11.0, s"graft_dot not injected correctly: $dot")
@@ -43,7 +43,19 @@ object ExtMain {
     val sig = spark.sql("SELECT size(graft_minhash_sig(array('a b c', 'b c d'))) AS n")
       .collect()(0).getInt(0)
     require(sig > 0, s"graft_minhash_sig not injected correctly: $sig")
-    println(s"EXTSMOKE leg1 OK: graft_dot=$dot capped=$capped sig_len=$sig")
+    // a kernel with a constant argument, and one whose result may be
+    // NULL for non-null arguments (length mismatch)
+    val windows = spark.sql("SELECT size(graft_window_hashes(array('a', 'b', 'c'), 2)) AS n")
+      .collect()(0).getInt(0)
+    require(windows == 2, s"graft_window_hashes not injected correctly: $windows")
+    val xhat = spark.sql(
+      """SELECT graft_sq_xhat(array(5L), array(0L), array(10L)) AS x,
+        |       graft_sq_xhat(array(1L, 2L), array(0L, 0L), array(1L)) AS mismatch""".stripMargin)
+      .collect()(0)
+    require(xhat.getSeq[Long](0) == Seq(4L) && xhat.isNullAt(1),
+      s"graft_sq_xhat not injected correctly: $xhat")
+    println(s"EXTSMOKE leg1 OK: graft_dot=$dot capped=$capped sig_len=$sig " +
+      s"windows=$windows sq_xhat=${xhat.getSeq[Long](0).mkString("[", ",", "]")}")
 
     // Leg 2: kernel-dependent operators end-to-end through SparkEntry.
     val d22 = graft.SparkEntry.queries("d22_minhash_lsh")(spark, sfDir).count()
