@@ -92,15 +92,26 @@ case class GraftKernel(name: String, children: Seq[Expression]) extends Expressi
     if (!kernel.accepts.isDefinedAt(children)) TypeCheckFailure(kernel.failure(children))
     else scala.util.Try(method).fold(e => TypeCheckFailure(s"$name: $e"), _ => TypeCheckSuccess)
 
+  /** [[method]]'s arguments: `null` at each per-row slot, then `consts`. */
+  @transient private lazy val argTemplate: Array[AnyRef] =
+    (perRow.map(_ => null) ++ consts.map(_.asInstanceOf[AnyRef])).toArray
+  @transient private lazy val perRowChildren: Array[Expression] = perRow.map(children).toArray
+
+  // Interpreted evaluation is the hot path where a kernel runs inside a
+  // lambda (`transform(..., m -> graft_kmeans_argmin(...))`: higher-order
+  // functions do not generate code), so a row costs one array copy and one
+  // reflective call. The copy, not a per-expression buffer, keeps an
+  // instance safe to evaluate from two threads. A foldable child is
+  // non-null and reaches the method through `consts`.
   override def eval(input: InternalRow): Any = {
-    val values = new Array[Any](children.length)
+    val args = argTemplate.clone()
     var i = 0
-    while (i < values.length) {
-      values(i) = children(i).eval(input)
-      if (values(i) == null) return null
+    while (i < perRowChildren.length) {
+      val v = perRowChildren(i).eval(input)
+      if (v == null) return null
+      args(i) = v.asInstanceOf[AnyRef]
       i += 1
     }
-    val args = (perRow.map(values) ++ consts).map(_.asInstanceOf[AnyRef])
     val r = try method.invoke(null, args: _*)
       catch { case e: InvocationTargetException => throw e.getCause }
     if (!kernel.nullable) r
@@ -311,11 +322,6 @@ object GraftFunctions {
     })
 
   private val byName: Map[String, KernelRow] = kernels.map(k => k.name -> k).toMap
-  kernels.foreach { k =>
-    require(k.ownerClass.getMethods.exists(m =>
-      m.getName == k.method && Modifier.isStatic(m.getModifiers)),
-      s"${k.name}: no static method ${k.owner}.${k.method}")
-  }
 
   private[functions] def kernel(name: String): KernelRow = byName(name)
 
