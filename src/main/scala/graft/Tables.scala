@@ -124,6 +124,44 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 
+  /** The size arm of [[rebalanceSmallScan]]'s gate (r13): the input's
+    * plan-stats size must reach this. Below ~2 MB the single-task kernel
+    * pass is already sub-break-even against the exchange + extra-stage
+    * floor (~0.3–0.6 s): the sf0.1 sweep measured t36 +0.60 s / t43
+    * +0.85 s / s34 +0.48 s from rebalancing sub-MB inputs, while the
+    * same operators at sf1 (3–6 MB files) win 1.5–4×. Non-file inputs
+    * (tests' parallelize frames) report the conf default size and pass
+    * this arm — the split-count gate is the binding one there. */
+  private[graft] val RebalanceMinBytes = 2L * 1000 * 1000
+
+  /** Small-input scan rebalance: when the input's split count leaves
+    * most cores idle (a single-row-group parquet file caps the scan —
+    * and everything fused onto it — at ONE task, while a single-process
+    * engine parallelizes within the row group), pay one round-robin
+    * exchange of the raw rows so the expensive per-row work downstream
+    * runs on every core. GATED so it is a no-op exactly when it would
+    * hurt: a production lake's layout has splits ≫ cores, the gate
+    * (splits·2 ≤ cores) never fires, and no corpus-sized shuffle is
+    * added — this is the AQE rebalance idea applied at the scan, where
+    * AQE cannot reach (it only rewrites shuffles). Use it ONLY under
+    * operators whose per-row work dominates their scan (kernel-heavy
+    * text passes), never blanket — for cheap projections the exchange
+    * costs more than the idle cores. */
+  private[graft] def rebalanceSmallScan(df: DataFrame): DataFrame = {
+    val cores = df.sparkSession.sparkContext.defaultParallelism
+    // size arm FIRST: stats come off the optimized logical plan (no
+    // physical planning), while .rdd builds the full physical plan +
+    // RDD DAG — ~0.1–0.5 s of driver time per call. Checking the cheap
+    // arm first makes the below-threshold case (every sub-MB input)
+    // near-free; the split probe only runs when a rebalance is
+    // plausible (measured: the .rdd-first order cost the sf0.1 wave
+    // keys +2.4 s of pure gate overhead).
+    if (df.queryExecution.optimizedPlan.stats.sizeInBytes >= RebalanceMinBytes &&
+        df.rdd.getNumPartitions * 2 <= cores)
+      df.repartition(cores)
+    else df
+  }
+
   /** Per-order subject assembly in ONE exchange — the shared relation
     * behind the survival/docket/utilization family (q12/q53/q50/q56/
     * q63/q64): order attributes plus first/last lineitem ship date,
@@ -155,44 +193,6 @@ object Tables {
     * corpus without that contract should key the filter on a
     * max(lit(1))-style presence flag from the orders branch instead.
     */
-  /** Small-input scan rebalance: when the input's split count leaves
-    * most cores idle (a single-row-group parquet file caps the scan —
-    * and everything fused onto it — at ONE task, while a single-process
-    * engine parallelizes within the row group), pay one round-robin
-    * exchange of the raw rows so the expensive per-row work downstream
-    * runs on every core. GATED so it is a no-op exactly when it would
-    * hurt: a production lake's layout has splits ≫ cores, the gate
-    * (splits·2 ≤ cores) never fires, and no corpus-sized shuffle is
-    * added — this is the AQE rebalance idea applied at the scan, where
-    * AQE cannot reach (it only rewrites shuffles). Use it ONLY under
-    * operators whose per-row work dominates their scan (kernel-heavy
-    * text passes), never blanket — for cheap projections the exchange
-    * costs more than the idle cores. */
-  /** Second gate arm (r13): plan-stats size ≥ [[RebalanceMinBytes]].
-    * Below ~2 MB the single-task kernel pass is already sub-break-even
-    * against the exchange + extra-stage floor (~0.3–0.6 s): the sf0.1
-    * sweep measured t36 +0.60 s / t43 +0.85 s / s34 +0.48 s from
-    * rebalancing sub-MB inputs, while the same operators at sf1
-    * (3–6 MB files) win 1.5–4×. Non-file inputs (tests' parallelize
-    * frames) report the conf default size and pass this arm — the
-    * split-count gate is the binding one there. */
-  private[graft] val RebalanceMinBytes = 2L * 1000 * 1000
-
-  private[graft] def rebalanceSmallScan(df: DataFrame): DataFrame = {
-    val cores = df.sparkSession.sparkContext.defaultParallelism
-    // size arm FIRST: stats come off the optimized logical plan (no
-    // physical planning), while .rdd builds the full physical plan +
-    // RDD DAG — ~0.1–0.5 s of driver time per call. Checking the cheap
-    // arm first makes the below-threshold case (every sub-MB input)
-    // near-free; the split probe only runs when a rebalance is
-    // plausible (measured: the .rdd-first order cost the sf0.1 wave
-    // keys +2.4 s of pure gate overhead).
-    if (df.queryExecution.optimizedPlan.stats.sizeInBytes >= RebalanceMinBytes &&
-        df.rdd.getNumPartitions * 2 <= cores)
-      df.repartition(cores)
-    else df
-  }
-
   private[graft] def orderAssembly(s: SparkSession, d: String): DataFrame =
     orderAssemblyOf(orders(s, d), lineitem(s, d))
 

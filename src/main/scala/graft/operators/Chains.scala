@@ -15,37 +15,24 @@ import graft.{Checkpoints, Tables}
   * with the root of its logical case. Unlike q15's 365-day gap heuristic,
   * this follows ARBITRARY-span links — the real semantics.
   *
-  * Two resolution strategies, chosen by the caller's depth hint (measured
-  * round 9 — the r8 verdict's adjudication):
+  * Each round advances every unsettled row [[Chains.HopsPerRound]]
+  * hops by joining it against the STATIC link table, which is
+  * repartitioned by id and sorted ONCE, then checkpointed, so its
+  * `HashPartitioning(id)` + per-partition order survive the checkpoint
+  * into every hop's sort-merge join and the lookup side never shuffles
+  * or sorts again. Only the geometrically shrinking active set crosses
+  * the wire each round. A chain of depth d needs d hops, but each round
+  * is one small shuffle per hop + one checkpoint of the survivors — for
+  * the bounded depths real link data has ("appeals are remanded under
+  * 16 times") this beats pointer doubling, whose every round
+  * re-shuffles the FULL evolving state on both join sides (r8 measured:
+  * the doubling form's absolute gap GREW across the 10× SF step, 1.5 s
+  * → 20.8 s vs DuckDB; the one-hop form is the fix).
   *
-  *  - ONE-HOP (depthHint ≤ [[Chains.OneHopDepthCutoff]]): each round
-  *    advances every unsettled row a single hop by joining it against the
-  *    STATIC link table — which is repartitioned by id and sorted ONCE,
-  *    then checkpointed, so its `HashPartitioning(id)` + per-partition
-  *    order survive into every round's sort-merge join and the lookup
-  *    side never shuffles or sorts again. Only the geometrically
-  *    shrinking active set crosses the wire each round. A chain of depth
-  *    d needs d rounds, but each round is one small shuffle + one
-  *    checkpoint of the survivors — for the bounded depths real link data
-  *    has ("appeals are remanded under 16 times") this beats doubling,
-  *    whose every round re-shuffles the FULL evolving state on both join
-  *    sides (r8 measured: the doubling form's absolute gap GREW across
-  *    the 10× SF step, 1.5 s → 20.8 s vs DuckDB; the one-hop form is the
-  *    fix).
-  *  - POINTER DOUBLING (deeper hints): each round joins unsettled rows
-  *    against the full state on `cur = id`, composing known ancestor
-  *    paths, so resolved distance squares per round and depth d settles
-  *    in ceil(log2 d) + 1 rounds. The right shape when depth is
-  *    unbounded/unknown — round count is logarithmic — at the price of
-  *    shuffling the evolving state every round.
-  *
-  * Fixpoint probes are count-based in both modes: every round already
-  * eagerly checkpoints the advanced rows, so a `count()` over the
-  * materialized partitions is a near-free scheduler round-trip and
-  * doubles as the emptiness test — no separate `isEmpty` job, and the
-  * doubling mode coalesces its shrinking active set to a partition count
-  * sized by that count before checkpointing (late rounds were pure
-  * scheduling overhead at the full width).
+  * The fixpoint probe is count-based: every round already eagerly
+  * checkpoints the advanced rows, so a `count()` over the materialized
+  * partitions is a near-free scheduler round-trip and doubles as the
+  * emptiness test — no separate `isEmpty` job.
   *
   * Fault tolerance at cluster scale: all per-round materializations go
   * through [[graft.Checkpoints]] — `localCheckpoint` (memory-only, fast)
@@ -56,15 +43,8 @@ import graft.{Checkpoints, Tables}
   */
 object Chains {
 
-  /** Depth hint at or below which [[resolveChains]] uses the one-hop
-    * strategy (d cheap rounds) instead of pointer doubling (log2 d heavy
-    * rounds). At 24 one-hop pays ≤24 small-shuffle rounds vs doubling's
-    * ~5 full-state rounds — the crossover sits well above real link-data
-    * depths. */
-  val OneHopDepthCutoff = 24
-
   /** Hops folded into one plan per materialized round in the one-hop
-    * strategy: settled-row extraction happens only at round boundaries,
+    * loop: settled-row extraction happens only at round boundaries,
     * so a round is ONE job of [[HopsPerRound]] pipelined
     * exchange+join+project steps instead of three checkpoint jobs — the
     * per-round scheduler/materialization constant measured at ~0.8 s/hop
@@ -77,36 +57,21 @@ object Chains {
     * the reference data when the parent case predates the extract.
     * Output: (id, chain_root, depth); depth = hops from id to root.
     *
-    * @param depthHint expected max chain depth (e.g. "appeals are
-    *   remanded under 16 times"): selects the strategy (one-hop vs
-    *   doubling). Correctness never depends on the hint — both loops run
-    *   to a counted fixpoint and fail fast if maxIters rounds don't
-    *   reach it.
-    */
-  def resolveChains(linksRaw: DataFrame, maxIters: Int = 20,
-      depthHint: Int = 1): DataFrame =
-    // state invariant (both modes): cur = an ancestor exactly `depth`
-    // hops up; settled ⇔ cur is a root.
-    if (depthHint <= OneHopDepthCutoff) resolveOneHop(linksRaw, maxIters)
-    else resolveDoubling(linksRaw, maxIters, depthHint)
-
-  /** One-hop rounds against a statically-partitioned link table: the
-    * lookup side is repartitioned by id + sorted ONCE and checkpointed
-    * (partitioning and ordering survive the checkpoint), so each hop's
-    * sort-merge join exchanges and sorts ONLY the advancing state side.
     * A row at depth d settles after d hops (its cur reaches the root,
-    * whose link row has parent NULL).
+    * whose link row has parent NULL). The loop runs to a counted
+    * fixpoint and fails fast if `maxIters` rounds don't reach it.
     *
-    * Dangling links need no pre-pass here (the doubling mode's id-set
-    * left join — two full-table exchanges of setup): the state carries
-    * `prev`, the ancestor one hop BELOW cur, and the hop join is a left
-    * join — a lookup MISS means cur is a dangling id, so the true root
-    * is `prev` (the record holding the dangling link is terminal) and
-    * the miss hop un-counts itself from depth. A miss can only happen on
-    * the hop that first reaches the dangling id, so the rule is exact at
-    * any chain position.
+    * Dangling links need no pre-pass: the state carries `prev`, the
+    * ancestor one hop BELOW cur, and the hop join is a left join — a
+    * lookup MISS means cur is a dangling id, so the true root is `prev`
+    * (the record holding the dangling link is terminal) and the miss hop
+    * un-counts itself from depth. A miss can only happen on the hop that
+    * first reaches the dangling id, so the rule is exact at any chain
+    * position.
     */
-  private def resolveOneHop(linksRaw: DataFrame, maxIters: Int): DataFrame = {
+  def resolveChains(linksRaw: DataFrame, maxIters: Int = 20): DataFrame = {
+    // state invariant: cur = an ancestor exactly `depth` hops up;
+    // settled ⇔ cur is a root.
     val p = linksRaw.sparkSession.sessionState.conf.numShufflePartitions
     val lut = Checkpoints.of(
       linksRaw.repartition(p, col("id")).sortWithinPartitions("id"))
@@ -154,61 +119,9 @@ object Chains {
       .select(col("id"), col("cur").as("chain_root"), col("depth"))
   }
 
-  /** Pointer-doubling rounds: an active row looks up its ancestor's OWN
-    * state row and jumps to that row's ancestor, so resolved distance
-    * squares per round. Per round exactly ONE distributed job (the eager
-    * checkpoint of the advanced rows, coalesced to a width sized by the
-    * previous round's count) — settled rows are never re-checkpointed;
-    * they accumulate as a union of already-materialized RDDs, bounded by
-    * the logarithmic round count. */
-  private def resolveDoubling(linksRaw: DataFrame, maxIters: Int,
-      depthHint: Int): DataFrame = {
-    val p = linksRaw.sparkSession.sessionState.conf.numShufflePartitions
-    // null out dangling parents once, up front: a left join against the
-    // id set — after this, parent IS NULL  ⇔  the record is a root.
-    // (Doubling composes ancestor PATHS, so the one-hop mode's prev
-    // device has no analogue here — a jump can pass a dangling id at any
-    // interior position of the composed path.)
-    val ids = linksRaw.select(col("id").as("pid"))
-    val links = linksRaw.as("a")
-      .join(ids.as("p"), col("a.parent") === col("p.pid"), "left")
-      .select(col("a.id").as("id"),
-        when(col("p.pid").isNull, lit(null).cast("long"))
-          .otherwise(col("a.parent")).as("parent"))
-    val st0 = Checkpoints.of(links.select(
-      col("id"),
-      coalesce(col("parent"), col("id")).as("cur"),
-      when(col("parent").isNull, lit(0L)).otherwise(lit(1L)).as("depth"),
-      col("parent").isNull.as("settled")))
-    var settled = st0.filter(col("settled"))
-    var active = st0.filter(!col("settled"))
-    var nActive = active.count()
-    var iter = 0
-    while (nActive > 0 && iter < maxIters) {
-      val lookup = settled.unionByName(active)
-      // late rounds hold geometrically fewer rows: keep ~64k rows per
-      // partition so the checkpoint job never schedules hundreds of
-      // near-empty tasks for a residual tail
-      val width = math.max(1L, math.min(p.toLong, nActive / 65536 + 1)).toInt
-      val adv = Checkpoints.of(active.as("s")
-        .join(lookup.as("t"), col("s.cur") === col("t.id"))
-        .select(col("s.id").as("id"), col("t.cur").as("cur"),
-          (col("s.depth") + col("t.depth")).as("depth"),
-          col("t.settled").as("settled"))
-        .coalesce(width))
-      settled = settled.unionByName(adv.filter(col("settled")))
-      active = adv.filter(!col("settled"))
-      nActive = active.count()
-      iter += 1
-    }
-    requireConverged(nActive, maxIters)
-    settled.select(col("id"), col("cur").as("chain_root"), col("depth"))
-  }
-
   /** Fail fast rather than emit silently-wrong intermediate ancestors:
-    * rows can stay active only if the link data has a cycle (which the
-    * dangling-parent nulling cannot detect) or depth exceeds what
-    * maxIters rounds resolve. */
+    * rows can stay active only if the link data has a cycle or depth
+    * exceeds what maxIters rounds resolve. */
   private def requireConverged(nActive: Long, maxIters: Int): Unit =
     require(nActive == 0,
       s"chain resolution did not converge in $maxIters rounds — " +
@@ -231,7 +144,7 @@ object Chains {
         .when(pmod(col("o_orderkey"), lit(1000)) === 555,
           -col("o_orderkey") - 1L)
         .otherwise(col("o_orderkey") - 1L).as("parent"))
-    resolveChains(linksRaw, depthHint = 16)
+    resolveChains(linksRaw)
       .withColumn("chain_size", count(lit(1)).over(Window.partitionBy("chain_root")))
       .select(col("id").as("o_orderkey"), col("chain_root"), col("depth"), col("chain_size"))
       .orderBy("o_orderkey")

@@ -180,19 +180,18 @@ object Dedup {
     * step each round (newlab(u) = min over neighbors' labels, then chase
     * the label's OWN label — labels are node ids, so label composition
     * is an equi-join). Plain propagation needs O(diameter) rounds; the
-    * jump step short-circuits long chains the same way q46's pointer
-    * doubling does. Each round is two linear equi-joins + one
-    * aggregation — nothing is ever all-pairs — and `localCheckpoint`
-    * truncates lineage so the plan does not grow with iteration count
-    * (reliable `checkpoint()` at cluster scale, as for q46).
+    * jump step short-circuits long chains by composing labels. Each
+    * round is two linear equi-joins + one aggregation — nothing is ever
+    * all-pairs — and `localCheckpoint` truncates lineage so the plan
+    * does not grow with iteration count (reliable `checkpoint()` at
+    * cluster scale, as for q46).
     *
     * Fixpoint = component minimum: labels only decrease and never go
     * below the component min μ; a fixpoint label is constant per
     * component (an edge with unequal labels would still propagate), and
     * a constant label m > μ is impossible because lab(μ) ≤ μ < m.
     */
-  def connectedComponents(edgesRaw: DataFrame,
-      maxIters: Int = 30, hintRounds: Int = 2): DataFrame = {
+  def connectedComponents(edgesRaw: DataFrame): DataFrame = {
     // materialize the edge list once — the gather reads it, and each
     // propagation round re-joins it; without the checkpoint either would
     // re-evaluate the whole upstream candidate-generation lineage
@@ -200,8 +199,15 @@ object Dedup {
     val edges = edgesRaw.select(col("u"), col("v"))
       .unionByName(edgesRaw.select(col("v").as("u"), col("u").as("v")))
       .graftCheckpoint()
-    driverComponents(edges).getOrElse(propagate(edges, maxIters, hintRounds))
+    driverComponents(edges).getOrElse(propagate(edges))
   }
+
+  /** Round budget of the distributed propagation; it fails fast past it. */
+  private val MaxRounds = 30
+
+  /** Rounds run before the first fixpoint probe (a probe is a job of
+    * its own). */
+  private val UnprobedRounds = 2
 
   /** Bytes one gathered edge costs the driver (two longs) — the divisor
     * that turns the broadcast threshold into an edge cap. */
@@ -270,8 +276,7 @@ object Dedup {
 
   /** The distributed rounds of [[connectedComponents]] over its
     * checkpointed two-direction edge list. */
-  private def propagate(edges: DataFrame,
-      maxIters: Int, hintRounds: Int): DataFrame = {
+  private def propagate(edges: DataFrame): DataFrame = {
     // init lab(u) = min(u, neighbors): the first propagation round folded
     // into the aggregation that materializes the node set
     var lab = edges.groupBy("u").agg(min(col("v")).as("mn"))
@@ -298,12 +303,12 @@ object Dedup {
       lab = next
       iter += 1
     }
-    // hint rounds run without the emptiness probe (a scheduler round-trip
-    // each — the q46 depthHint rationale), then probe to true fixpoint
-    while (iter < hintRounds && !converged) round(probe = false)
-    while (iter < maxIters && !converged) round(probe = true)
+    // the first rounds run without the emptiness probe, then probe to
+    // true fixpoint
+    while (iter < UnprobedRounds && !converged) round(probe = false)
+    while (iter < MaxRounds && !converged) round(probe = true)
     require(converged,
-      s"connected components did not converge in $maxIters rounds")
+      s"connected components did not converge in $MaxRounds rounds")
     lab.select(col("node"), col("lab").as("cluster_id"))
   }
 

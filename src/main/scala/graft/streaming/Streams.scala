@@ -89,20 +89,23 @@ object Streams {
   /** Lock for runToTable's scoped-conf window. */
   private object confLock
 
-  /** Streaming source over the events table: batch-read the schema, then
-    * readStream the same file. The nanos shim is applied via the one
-    * sanctioned loader hook ([[graft.Tables.ensureNanosShim]]) — stream
-    * operators themselves never mutate session conf — and `ts` is
-    * normalized to a micros TimestampType instant by the same shared
+  /** Streaming source over one table: the schema comes from the batch
+    * loader ([[graft.Tables.load]], memoized per session), then the
+    * stream reads the same `<name>.parquet` file. */
+  private def tableStream(spark: SparkSession, dir: String, name: String): DataFrame =
+    spark.readStream.schema(graft.Tables.load(spark, dir, name).schema)
+      .option("pathGlobFilter", s"$name.parquet").parquet(dir)
+
+  /** Streaming source over the events table. The nanos shim is applied
+    * via the one sanctioned loader hook ([[graft.Tables.ensureNanosShim]])
+    * — stream operators themselves never mutate session conf — and `ts`
+    * is normalized to a micros TimestampType instant by the same shared
     * definition the batch loader uses ([[graft.Tables.normalizeEventTs]]),
     * so batch and stream cannot drift on the physical ts type.
     */
   private def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     graft.Tables.ensureNanosShim(spark)
-    val schema = graft.Tables.load(spark, dir, "events").schema
-    graft.Tables.normalizeEventTs(
-      spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir))
+    graft.Tables.normalizeEventTs(tableStream(spark, dir, "events"))
   }
 
   /** st33: tumbling-window aggregation with watermark.
@@ -218,8 +221,7 @@ object Streams {
         .as(Seq("band_idx", "band_key")))
       .distinct()
       .withColumn("band_hit", lit(true))
-    val stream = spark.readStream.schema(docs.schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val stream = tableStream(spark, dir, "documents")
       .filter(isBatch)
       .withColumn("h", md5(col("text")))
       .withColumn("words", split(col("text"), " "))
@@ -298,7 +300,7 @@ object Streams {
         .filter(pmod(col("vec_id"), lit(graft.operators.Dedup.IncrementalBatchMod.toLong)) =!= 0L))
     val packed = broadcast(Similarity.packCentroids(Similarity.kmeansModel(standing)))
     val arriving = Similarity.quantize(
-      embeddingsStream(spark, dir).filter(pmod(col("vec_id"), lit(graft.operators.Dedup.IncrementalBatchMod.toLong)) === 0L))
+      tableStream(spark, dir, "embeddings").filter(pmod(col("vec_id"), lit(graft.operators.Dedup.IncrementalBatchMod.toLong)) === 0L))
     val routed = arriving.join(packed, lit(true), "inner")
       .withColumn("key", expr("graft_kmeans_argmin(q, cents)"))
       .select((col("key") % 100).cast("int").as("cid"),
@@ -310,13 +312,6 @@ object Streams {
       .select(col("cid"), col("n_arrivals"), col("min_dist"),
         expr("sum_dist DIV n_arrivals").as("avg_dist"))
       .orderBy("cid")
-  }
-
-  /** Streaming source over the embeddings table (eventsStream's shape). */
-  private def embeddingsStream(spark: SparkSession, dir: String): DataFrame = {
-    val schema = graft.Tables.embeddings(spark, dir).schema
-    spark.readStream.schema(schema)
-      .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
   }
 
   case class Ev(user_id: Long, us: Long)
@@ -575,8 +570,7 @@ object Streams {
       lit(graft.operators.Dedup.IncrementalBatchMod.toLong)) === 0L
     val docs = graft.Tables.documents(spark, dir)
     val js = explode(array((0 until TextAnalysis.CmsRows).map(lit): _*)).as("j")
-    val stream = spark.readStream.schema(docs.schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val stream = tableStream(spark, dir, "documents")
       .filter(isNew)
       .select(explode(split(coalesce(col("text"), lit("")), " ")).as("token"))
       .select(col("token"), js)
@@ -626,8 +620,7 @@ object Streams {
     val d = Dedup.bloomDocs(docs)
     val mBits = Dedup.bloomMBits(d, isNew)
     val streamCells = Dedup.bloomDocs(
-        spark.readStream.schema(docs.schema)
-          .option("pathGlobFilter", "documents.parquet").parquet(dir)
+        tableStream(spark, dir, "documents")
           .filter(!isNew))
       .select(explode(Dedup.bloomPosArray(mBits)).as("pos"))
       .groupBy("pos").agg(count(lit(1)).as("n_keys"))
@@ -690,8 +683,7 @@ object Streams {
       .selectExpr(TextAnalysis.DriftStack)
       .groupBy("dim", "value").agg(count(lit(1)).as("old_n"))
     val arriving = TextAnalysis.withPredLang(
-        spark.readStream.schema(docs.schema)
-          .option("pathGlobFilter", "documents.parquet").parquet(dir)
+        tableStream(spark, dir, "documents")
           .filter(isNew)
           .withColumn("words", split(col("text"), " ")))
       .selectExpr(TextAnalysis.DriftStack)
@@ -808,7 +800,7 @@ object Streams {
     val model = Similarity.kmeansModel(standing)
     val packed = broadcast(Similarity.packCentroids(model))
     val arriving = Similarity.quantize(
-      embeddingsStream(spark, dir).filter(pmod(col("vec_id"), lit(graft.operators.Dedup.IncrementalBatchMod.toLong)) === 0L))
+      tableStream(spark, dir, "embeddings").filter(pmod(col("vec_id"), lit(graft.operators.Dedup.IncrementalBatchMod.toLong)) === 0L))
     val cells = st48CellsOf(arriving, packed)
     // the tail joins the drained cells beside model/standing subtrees —
     // runToTable's eager detach (r16) already returns the 1024-cell

@@ -136,11 +136,17 @@ class PlanSpec extends AnyFunSuite {
     // q08/q73/t33. This walk pins the CLASS out: any new or edited
     // operator that re-grows one goes red here with its plan printed.
     // Static (pre-AQE) plans suffice — AQE never introduces or removes
-    // aggregate strategies — so no query is executed.
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).collect {
-      case (k, fn) if !k.startsWith("st") && !sortAggWaivers(k) =>
+    // aggregate strategies — so no query is executed. The same walk bans
+    // CartesianProduct from every batch key, waiver-free: an all-pairs
+    // join hides under correct values just as a sort aggregate does.
+    val plans = SparkEntry.queries.toSeq.sortBy(_._1).collect {
+      case (k, fn) if !k.startsWith("st") =>
         k -> fn(spark, dir).queryExecution.executedPlan.toString
-    }.filter(_._2.contains("SortAggregate"))
+    }
+    val offenders = plans.filter { case (k, p) =>
+      (p.contains("SortAggregate") && !sortAggWaivers(k)) ||
+        p.contains("CartesianProduct")
+    }
     assert(offenders.isEmpty,
       offenders.map { case (k, p) => s"$k:\n$p" }.mkString("\n\n"))
   }

@@ -273,8 +273,8 @@ class PropertySpec extends AnyFunSuite {
     // Random parent forests (parent < id keeps them acyclic, like the
     // reference's remand chains which always link to an EARLIER case),
     // with dangling links (parent ids absent from the table) and nulls.
-    // Verifies root labels AND depths from the pointer-doubling loop,
-    // including depths that are not powers of two.
+    // Verifies root labels AND depths from the one-hop loop, including
+    // depths that are not multiples of the hops per round.
     import spark.implicits._
     import graft.operators.Chains
     val rnd = new scala.util.Random(11)
@@ -299,13 +299,28 @@ class PropertySpec extends AnyFunSuite {
       val df = links.map { case (id, p) =>
         (id, Option(p).map(_.longValue)) }.toDF("id", "parent")
       val want = (0L until n.toLong).map(id => id -> ref(id)).toMap
-      // exercise BOTH strategies on the same forest: a small hint takes
-      // the one-hop path, a hint above the cutoff takes pointer doubling
-      Seq(4 -> "one-hop", 1000 -> "doubling").foreach { case (hint, label) =>
-        val got = Chains.resolveChains(df, maxIters = 40, depthHint = hint)
-          .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-        assert(got === want, s"trial $trial mismatch ($label)")
+      val got = Chains.resolveChains(df, maxIters = 40)
+        .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+      assert(got === want, s"trial $trial mismatch")
+    }
+  }
+
+  test("chain resolution fails with a named error instead of returning rows when it cannot converge") {
+    // a cycle never settles, and a chain deeper than maxIters rounds of
+    // HopsPerRound hops runs out of budget: both must throw, never emit
+    // the intermediate ancestors as roots
+    import spark.implicits._
+    import graft.operators.Chains
+    val cycle = Seq((1L, Option(2L)), (2L, Option(1L))).toDF("id", "parent")
+    val depth = 2 * Chains.HopsPerRound + 1
+    val deep = (0L to depth.toLong).map(id => (id, if (id == 0) None else Some(id - 1)))
+      .toDF("id", "parent")
+    Seq("2-cycle" -> cycle, s"depth-$depth chain" -> deep).foreach { case (name, links) =>
+      val e = intercept[IllegalArgumentException] {
+        Chains.resolveChains(links, maxIters = 2).collect()
       }
+      assert(e.getMessage.contains("chain resolution did not converge"),
+        s"$name: ${e.getMessage}")
     }
   }
 
@@ -327,7 +342,7 @@ class PropertySpec extends AnyFunSuite {
       // and the resolved chain result is unaffected by the mode
       val links = Seq((1L, Option.empty[Long]), (2L, Some(1L)), (3L, Some(2L)))
         .toDF("id", "parent")
-      val roots = graft.operators.Chains.resolveChains(links, depthHint = 4)
+      val roots = graft.operators.Chains.resolveChains(links)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(roots === Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
     } finally {
@@ -411,7 +426,8 @@ class PropertySpec extends AnyFunSuite {
         .map(e => (math.min(e._1, e._2), math.max(e._1, e._2))).distinct
     }
     // 90 spokes on hub 50 plus 10 edges among the leaves; the path's
-    // minimum sits at its far end, 40 hops > 2^hintRounds from node 40
+    // minimum sits at its far end, 40 hops from node 40 — past what the
+    // unprobed first rounds resolve
     val hub = (1L to 90L).map(i => (50L, 100L + i)) ++
       (1L to 10L).map(i => (100L + i, 200L + i))
     val path = (0L until 40L).map(i => (i + 1, i))

@@ -2,12 +2,14 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-/** Dumps the formatted physical plan of every SparkEntry query to a
-  * markdown file (docs/PLANS.md) — the `.explain("formatted")` review
-  * artifact for plan-quality auditing: PushedFilters, ReadSchema
-  * pruning, join strategies, exchange counts, codegen spans.
+/** Dumps the formatted physical plan of every batch SparkEntry query to
+  * a markdown file, on demand — the `.explain("formatted")` view for
+  * plan-quality auditing: PushedFilters, ReadSchema pruning, join
+  * strategies, exchange counts, codegen spans. Streaming (st*) keys are
+  * skipped: their plans are per-micro-batch. PlanSpec guards plan shape;
+  * this dump is for reading and for diffing two trees.
   *
-  * Usage: tools/run.sh graft.ExplainAll /root/testdata/sf0.001 docs/PLANS.md
+  * Usage: tools/run.sh graft.ExplainAll <sfDir> /tmp/plans.md
   */
 object ExplainAll {
   def main(args: Array[String]): Unit = {
@@ -16,7 +18,7 @@ object ExplainAll {
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     sb.append("# Physical plans (sf=" + sfDir + ", local[4], AQE off for readability)\n\n")
-    sb.append("Generated by `graft.ExplainAll`. Streaming queries (st33/st34) are\n")
+    sb.append("Generated by `graft.ExplainAll`. Streaming queries (every st* key) are\n")
     sb.append("excluded — their plans are per-micro-batch.\n\n")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
@@ -30,8 +32,9 @@ object ExplainAll {
         sb.append("\n```\n\n")
       }
     }
-    Files.createDirectories(Paths.get(outPath).getParent)
-    Files.writeString(Paths.get(outPath), sb.toString)
+    val out = Paths.get(outPath)
+    Option(out.getParent).foreach(Files.createDirectories(_))
+    Files.writeString(out, sb.toString)
     println(s"wrote $outPath")
     spark.stop()
   }
